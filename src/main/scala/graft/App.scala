@@ -1,5 +1,7 @@
 package graft
 
+import java.util.concurrent.{ExecutionException, Future, LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
+
 import org.apache.spark.sql.SparkSession
 
 import graft.pipeline.{TraceConfig, TracePipeline}
@@ -18,8 +20,8 @@ import graft.sources.Manifest
   *    (main.js:42-46); run id injectable via `GRAFT_RUN_ID` for
   *    deterministic tests.
   *  - O9 chunking: `GRAFT_MAX_RECORDS_PER_FILE` caps rows per output file
-  *    (the reference's 10k-row JSON chunks, main.js:108,180 — here a hint
-  *    to the committer, not a driver-side loop).
+  *    (the reference's 10k-row JSON chunks, main.js:108,180 — here a
+  *    per-write option to the committer, not a driver-side loop).
   *  - O10 rerun skip: optional processed-file manifest.
   *  - O19 progress: stage-level log lines via a SparkListener (the
   *    reference's progress bars; Spark UI is disabled in-harness).
@@ -51,20 +53,28 @@ object App {
       writeJdbc = writeJdbc,
       jdbcUrl = env.getOrElse("GRAFT_JDBC_URL", "jdbc:derby:memory:graft;create=true"),
       jdbcTable = env.getOrElse("GRAFT_JDBC_TABLE", "trace"),
-      maxRecordsPerFile = env.getOrElse("GRAFT_MAX_RECORDS_PER_FILE", "10000").toLong,
+      maxRecordsPerFile = Env.long(env, "GRAFT_MAX_RECORDS_PER_FILE").getOrElse(10000L),
       useManifest = env.getOrElse("GRAFT_USE_MANIFEST", "0") == "1",
       trace = TraceConfig(
         inputGlob = inputGlob,
         startCol = env.getOrElse("GRAFT_START_COL", "start_time"),
         endCol = env.getOrElse("GRAFT_END_COL", "end_time"),
-        minDurationMs = env.getOrElse("GRAFT_MIN_DURATION_MS", "2000").toLong,
-        longDurationMs = env.getOrElse("GRAFT_LONG_DURATION_MS", "2650").toLong))
+        minDurationMs = Env.long(env, "GRAFT_MIN_DURATION_MS").getOrElse(2000L),
+        longDurationMs = Env.long(env, "GRAFT_LONG_DURATION_MS").getOrElse(2650L)))
   }
 
-  /** Run the full pipeline with the configured sinks; returns output dir. */
+  /** Run the full pipeline with the configured sinks; returns output dir.
+    *
+    * The sinks run in two waves over one persisted frame, on two threads:
+    * the full CSV (which fills the cache) alongside the JDBC table's DDL,
+    * then the long CSV alongside the single-writer JDBC append. A sink's
+    * second step starts only if its first succeeded. Every started sink is
+    * awaited before the cache is released; the first failure (in that
+    * sink order) is rethrown with the others suppressed on it.
+    */
   def run(spark: SparkSession, cfg: AppConfig): String = {
     val outDir = s"${cfg.outputRoot}/${cfg.runId}" // O20
-    spark.conf.set("spark.sql.files.maxRecordsPerFile", cfg.maxRecordsPerFile) // O9
+    val csvCap = Some(cfg.maxRecordsPerFile) // O9, per write: the session conf is left alone
 
     // O19: stage-level progress lines (stands in for the progress bars).
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -89,16 +99,62 @@ object App {
       val manifestDir = s"${cfg.outputRoot}/_manifest" // shared ACROSS runs (O10)
       val input = if (cfg.useManifest) Manifest.unprocessedOnly(raw, manifestDir) else raw
       val transformed = TracePipeline.transform(input, cfg.trace).persist()
+      lazy val rows = JdbcSink.keyed(transformed) // O14-O17
+      val sinks = new SinkThreads
       try {
-        if (cfg.writeCsv) // O12 + O13
-          CsvSinks.fanOut(transformed, cfg.trace, s"$outDir/full", s"$outDir/long")
-        if (cfg.writeJdbc) // O14-O17
-          JdbcSink.write(transformed, cfg.jdbcUrl, cfg.jdbcTable,
-            integerType = "BIGINT", textType = "CLOB", singleWriter = true)
+        val full = sinks.start(cfg.writeCsv)( // O12
+          CsvSinks.writeFull(transformed, s"$outDir/full", csvCap))
+        val ddl = sinks.start(cfg.writeJdbc)(
+          JdbcSink.prepareTable(rows, cfg.jdbcUrl, cfg.jdbcTable,
+            integerType = "BIGINT", textType = "CLOB"))
+        val fullFailure = sinks.await(full)
+        val ddlFailure = sinks.await(ddl)
+        val long = sinks.start(cfg.writeCsv && fullFailure.isEmpty)( // O13
+          CsvSinks.writeLongSlice(transformed, cfg.trace, s"$outDir/long", csvCap))
+        val append = sinks.start(cfg.writeJdbc && ddlFailure.isEmpty)(
+          JdbcSink.append(rows, cfg.jdbcUrl, cfg.jdbcTable, singleWriter = true))
+        val failures = Seq(fullFailure, ddlFailure, sinks.await(long), sinks.await(append)).flatten
+        failures.headOption.foreach { first =>
+          failures.tail.foreach(first.addSuppressed)
+          throw first
+        }
         if (cfg.useManifest) Manifest.markProcessed(raw, manifestDir)
-      } finally transformed.unpersist()
+      } finally {
+        sinks.close()
+        transformed.unpersist()
+      }
       outDir
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** The two threads `run` overlaps its sinks on. Both start at
+    * construction, outside any running SQL execution: a thread copies
+    * Spark's local properties (`spark.sql.execution.id`, job group) from
+    * the thread that creates it.
+    */
+  private final class SinkThreads extends AutoCloseable {
+    private val pool = new ThreadPoolExecutor(2, 2, 0L, TimeUnit.MILLISECONDS,
+      new LinkedBlockingQueue[Runnable](), (r: Runnable) => {
+        val t = new Thread(r, "graft-app-sink")
+        t.setDaemon(true)
+        t
+      })
+    pool.prestartAllCoreThreads()
+
+    def start(enabled: Boolean)(body: => Unit): Option[Future[_]] =
+      if (enabled) {
+        val task: Runnable = () => body
+        Some(pool.submit(task))
+      } else None
+
+    /** Waits for a started sink; returns its failure, if any. */
+    def await(sink: Option[Future[_]]): Option[Throwable] =
+      sink.flatMap { f =>
+        try { f.get(); None }
+        catch { case e: ExecutionException => Some(e.getCause) }
+      }
+
+    def close(): Unit = pool.shutdown()
   }
 
   def main(args: Array[String]): Unit = {

@@ -17,6 +17,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // Parsed before the session starts, so a malformed value fails fast.
+    val roundOverride = Env.int(sys.env, "SPARK_GRAFT_ROUND")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -831,7 +833,7 @@ object Bench {
     // driver had written BENCH_r21.json and filed itself as next round's
     // snapshot; the cpu-suffixed snapshot naming below is the structural
     // fix, the env knob the explicit one).
-    val thisRound: Int = sys.env.get("SPARK_GRAFT_ROUND").map(_.toInt).getOrElse(
+    val thisRound: Int = roundOverride.getOrElse(
       roundsIn(".", "BENCH_r(\\d+)\\.json").foldLeft(0)(math.max) + 1)
     // Settled-comparator cadence (r16 verdict item 4): the scaled16
     // REBUILD comparators exist only to be beaten by the refresh/fold

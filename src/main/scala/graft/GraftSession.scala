@@ -8,10 +8,10 @@ import org.apache.spark.sql.SparkSession
   * The reference (`/root/reference/main.js`, see SURVEY.md §3 E1) scales by
   * giving Node a 64 GiB heap and holding the whole dataset in memory; the
   * Spark-native answer is a tuned lazy session: AQE on (runtime re-plan,
-  * skew-join splitting, partition coalescing), shuffle partitions sized for
-  * the local harness (32 threads — NOT the 200 default, which would produce
-  * tiny shuffle files locally; on a real cluster this is overridden per
-  * deployment), UTC so timestamp semantics match the DuckDB oracle.
+  * skew-join splitting, partition coalescing), shuffle partitions sized to
+  * `cores` (NOT the 200 default, which would produce tiny shuffle files
+  * locally; on a real cluster this is overridden per deployment), UTC so
+  * timestamp semantics match the DuckDB oracle.
   */
 object GraftSession {
 
@@ -41,7 +41,13 @@ object GraftSession {
       .config("spark.sql.warehouse.dir",
         s"${System.getProperty("java.io.tmpdir")}/graft-warehouse")
     if (new SparkConf(true).contains("spark.master")) base
-    else base.master(s"local[$cores]")
+    else base
+      .master(s"local[$cores]")
+      // Locally, "parallel" file listing runs on threads of this JVM over
+      // the same filesystem: a glob that expands to more than 32 paths
+      // would start a Spark job that only adds scheduling cost. List on
+      // the driver instead; a submitted master keeps Spark's default.
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", Int.MaxValue.toString)
   }
 
   def get(appName: String = "graft", cores: Int = 32): SparkSession = {

@@ -19,7 +19,8 @@ import graft.pipeline.{TraceConfig, TracePipeline}
   * transformed DataFrame once and run the two (cheap, filter-only) writes
   * against it, so the scan/dedup work is not recomputed per sink — the Spark
   * replacement for the reference's in-memory `recordsToWrite` barrier
-  * (main.js:51,208-213).
+  * (main.js:51,208-213). `graft.App` runs the full write first (it fills
+  * the cache), then the long slice.
   */
 object CsvSinks {
 
@@ -36,28 +37,22 @@ object CsvSinks {
     df.select(cols.toIndexedSeq: _*)
   }
 
-  /** O12: full CSV with header. */
-  def writeFull(df: DataFrame, outDir: String): Unit =
-    flattenForCsv(df).write
+  /** O12: full CSV with header. `maxRecordsPerFile` caps rows per output
+    * file for this write only (O9); without it the session's
+    * `spark.sql.files.maxRecordsPerFile` applies.
+    */
+  def writeFull(df: DataFrame, outDir: String, maxRecordsPerFile: Option[Long] = None): Unit = {
+    val writer = flattenForCsv(df).write
       .mode(SaveMode.Overwrite)
       .option("header", "true")
-      .csv(outDir)
+    maxRecordsPerFile.fold(writer)(n => writer.option("maxRecordsPerFile", n)).csv(outDir)
+  }
 
   /** O13: the "long records" slice — second sink over the same plan. */
-  def writeLongSlice(df: DataFrame, cfg: TraceConfig, outDir: String): Unit =
-    writeFull(TracePipeline.longSlice(df, cfg), outDir)
-
-  /** Both sinks over one persisted plan (replaces the reference's barrier).
-    * If the caller already persisted `df`, that cache is left untouched
-    * (persist() on a cached DF returns the same instance — unpersisting
-    * here would silently evict the caller's cache before its later sinks).
-    */
-  def fanOut(df: DataFrame, cfg: TraceConfig, fullDir: String, longDir: String): Unit = {
-    val callerCached = df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val cached = if (callerCached) df else df.persist()
-    try {
-      writeFull(cached, fullDir)
-      writeLongSlice(cached, cfg, longDir)
-    } finally if (!callerCached) cached.unpersist()
-  }
+  def writeLongSlice(
+      df: DataFrame,
+      cfg: TraceConfig,
+      outDir: String,
+      maxRecordsPerFile: Option[Long] = None): Unit =
+    writeFull(TracePipeline.longSlice(df, cfg), outDir, maxRecordsPerFile)
 }

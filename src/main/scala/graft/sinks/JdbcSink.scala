@@ -1,6 +1,6 @@
 package graft.sinks
 
-import java.sql.DriverManager
+import java.sql.{Connection, DriverManager}
 import java.util.Properties
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
@@ -91,9 +91,89 @@ object JdbcSink {
     s"""CREATE TABLE $table ("UID" VARCHAR(64) PRIMARY KEY, ${cols.mkString(", ")})"""
   }
 
-  /** O14+O15+O16+O17: ensure table exists (via a direct JDBC connection —
-    * Spark's writer cannot express PRIMARY KEY), generate the UID surrogate
-    * key, coerce types, append with batched inserts.
+  /** O15+O16: the frame [[write]] appends — `UID` first, then every column
+    * coerced to the INTEGER/TEXT model. A df that already carries a `UID`
+    * column keeps it verbatim; otherwise each row gets a fresh `uuid()`.
+    */
+  def keyed(df: DataFrame, numberKeys: Set[String] = defaultNumberKeys): DataFrame = {
+    val withUid =
+      if (df.columns.contains("UID")) df
+      else df.withColumn("UID", expr("uuid()"))
+    val ordered = withUid.select(("UID" +: withUid.columns.filterNot(_ == "UID").toIndexedSeq).map(col): _*)
+    coerceTypes(ordered, numberKeys).withColumn("UID", col("UID").cast(StringType))
+  }
+
+  /** Whether `table` exists on `conn`.
+    *
+    * Identifier folding differs per engine (Derby/H2 upper-fold, PostgreSQL
+    * lower-folds, SQLite is case-insensitive): probe all three. getTables
+    * treats the name as a LIKE pattern, so '_'/'%' are escaped with the
+    * driver's escape string, or "my_table" would match an unrelated
+    * "myXtable". A qualified `schema.table` probes that SPECIFIC schema — a
+    * null schema pattern matches same-named tables in unrelated schemas.
+    */
+  def tableExists(conn: Connection, table: String): Boolean = {
+    val meta = conn.getMetaData
+    val esc = meta.getSearchStringEscape
+    def escape(t: String): String =
+      t.replace(esc, esc + esc).replace("_", esc + "_").replace("%", esc + "%")
+    def variants(s: String): Seq[String] =
+      Seq(s, s.toUpperCase, s.toLowerCase).distinct
+    val (schemaPart, tablePart) = table.split("\\.", 2) match {
+      case Array(s, t) => (Some(s), t)
+      case _ => (None, table)
+    }
+    val schemaPatterns =
+      schemaPart.map(variants(_).map(escape)).getOrElse(Seq(null))
+    variants(tablePart).exists { t =>
+      schemaPatterns.exists { sp =>
+        val rs = meta.getTables(null, sp, escape(t), null)
+        try rs.next() finally rs.close()
+      }
+    }
+  }
+
+  /** O14: create `table` from `keyedDf`'s schema unless it exists, over a
+    * direct JDBC connection (Spark's writer cannot express PRIMARY KEY).
+    * Reads only the schema: no Spark job runs.
+    */
+  def prepareTable(
+      keyedDf: DataFrame,
+      url: String,
+      table: String,
+      properties: Properties = new Properties(),
+      numberKeys: Set[String] = defaultNumberKeys,
+      integerType: String = "INTEGER",
+      textType: String = "TEXT"): Unit = {
+    val conn = DriverManager.getConnection(url, properties)
+    try {
+      if (!tableExists(conn, table)) {
+        val st = conn.createStatement()
+        try st.executeUpdate(createTableDdl(keyedDf, table, numberKeys, integerType, textType))
+        finally st.close()
+      }
+    } finally conn.close()
+  }
+
+  /** O17: append `keyedDf` to a prepared table with batched inserts;
+    * `singleWriter` funnels them through one task.
+    */
+  def append(
+      keyedDf: DataFrame,
+      url: String,
+      table: String,
+      properties: Properties = new Properties(),
+      batchSize: Int = 1000,
+      singleWriter: Boolean = false): Unit = {
+    val out = if (singleWriter) keyedDf.coalesce(1) else keyedDf
+    out.write
+      .mode(SaveMode.Append)
+      .option("batchsize", batchSize.toString)
+      .option("truncate", "false")
+      .jdbc(url, table, properties)
+  }
+
+  /** O14-O17 in one call: [[keyed]], [[prepareTable]], then [[append]].
     *
     * Rerun semantics: the default `uuid()` UID mirrors the reference
     * (O15, a fresh v4 per insert) and therefore CANNOT make reruns
@@ -114,52 +194,8 @@ object JdbcSink {
       singleWriter: Boolean = false,
       integerType: String = "INTEGER",
       textType: String = "TEXT"): Unit = {
-    val withUid =
-      if (df.columns.contains("UID")) df
-      else df.withColumn("UID", expr("uuid()"))
-    val keyed = withUid.select(("UID" +: withUid.columns.filterNot(_ == "UID").toIndexedSeq).map(col): _*)
-    val coerced = coerceTypes(keyed, numberKeys ++ Set.empty)
-      .withColumn("UID", col("UID").cast(StringType))
-
-    val conn = DriverManager.getConnection(url, properties)
-    try {
-      // identifier folding differs per engine (Derby/H2 upper-fold,
-      // PostgreSQL lower-folds, SQLite is case-insensitive): probe all
-      // three. getTables treats the name as a LIKE pattern, so escape
-      // '_'/'%' with the driver's escape string or "my_table" would match
-      // an unrelated "myXtable" and silently skip the PK-bearing CREATE.
-      // Probe the SPECIFIC schema when `table` is qualified — a null
-      // schema pattern matches same-named tables in unrelated schemas and
-      // would silently skip the CREATE (see IdempotentJdbcSink).
-      val esc = conn.getMetaData.getSearchStringEscape
-      def escape(t: String): String =
-        t.replace(esc, esc + esc).replace("_", esc + "_").replace("%", esc + "%")
-      def variants(s: String): Seq[String] =
-        Seq(s, s.toUpperCase, s.toLowerCase).distinct
-      val (schemaPart, tablePart) = table.split("\\.", 2) match {
-        case Array(s, t) => (Some(s), t)
-        case _ => (None, table)
-      }
-      val schemaPatterns =
-        schemaPart.map(variants(_).map(escape)).getOrElse(Seq(null))
-      val exists = variants(tablePart).exists { t =>
-        schemaPatterns.exists { sp =>
-          val rs = conn.getMetaData.getTables(null, sp, escape(t), null)
-          try rs.next() finally rs.close()
-        }
-      }
-      if (!exists) {
-        val st = conn.createStatement()
-        try st.executeUpdate(createTableDdl(coerced, table, numberKeys, integerType, textType))
-        finally st.close()
-      }
-    } finally conn.close()
-
-    val out = if (singleWriter) coerced.coalesce(1) else coerced
-    out.write
-      .mode(SaveMode.Append)
-      .option("batchsize", batchSize.toString)
-      .option("truncate", "false")
-      .jdbc(url, table, properties)
+    val rows = keyed(df, numberKeys)
+    prepareTable(rows, url, table, properties, numberKeys, integerType, textType)
+    append(rows, url, table, properties, batchSize, singleWriter)
   }
 }

@@ -7,6 +7,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.sinks.JdbcSink
+
 /** Exactly-once streaming delivery into a JDBC table via `foreachBatch` +
   * batch-id idempotence — the production pattern for relational sinks
   * (Spark's JDBC sink alone is at-least-once: a failed micro-batch
@@ -40,28 +42,9 @@ object IdempotentJdbcSink {
     try {
       // Probe the SPECIFIC (schema, table): a bare all-schema name scan
       // would report a same-named table from an unrelated schema and then
-      // DELETE against the (absent) default-schema one. Identifier folding
-      // varies per engine, so upper/lower variants are tried, with LIKE
-      // metacharacters escaped (same contract as JdbcSink.write). For
-      // multi-schema targets pass a schema-qualified `table`.
-      val meta = conn.getMetaData
-      val esc = meta.getSearchStringEscape
-      def escape(s: String): String =
-        s.replace(esc, esc + esc).replace("_", esc + "_").replace("%", esc + "%")
-      def variants(s: String): Seq[String] =
-        Seq(s, s.toUpperCase, s.toLowerCase).distinct
-      val (schemaPart, tablePart) = table.split("\\.", 2) match {
-        case Array(s, t) => (Some(s), t)
-        case _ => (None, table)
-      }
-      val exists = variants(tablePart).exists { t =>
-        val schemaPatterns = schemaPart.map(variants(_).map(escape)).getOrElse(Seq(null))
-        schemaPatterns.exists { sp =>
-          val rs = meta.getTables(null, sp, escape(t), null)
-          try rs.next() finally rs.close()
-        }
-      }
-      if (exists) {
+      // DELETE against the (absent) default-schema one. For multi-schema
+      // targets pass a schema-qualified `table`.
+      if (JdbcSink.tableExists(conn, table)) {
         // Spark's JDBC writer creates case-preserving QUOTED column names,
         // so the predicate must quote too (ANSI double quotes).
         val st = conn.prepareStatement(s"""DELETE FROM $table WHERE "batch_id" = ?""")

@@ -28,7 +28,11 @@ class SinksSpec extends AnyFunSuite {
   test("CSV fan-out writes header CSV + long slice over one persisted plan (O12-O13)") {
     val dir = Files.createTempDirectory("csv_sink").toString
     val cfg = TraceConfig(inputGlob = "unused")
-    CsvSinks.fanOut(df, cfg, s"$dir/full", s"$dir/long")
+    val cached = df.persist()
+    try {
+      CsvSinks.writeFull(cached, s"$dir/full")
+      CsvSinks.writeLongSlice(cached, cfg, s"$dir/long")
+    } finally cached.unpersist()
     val full = spark.read.option("header", "true").csv(s"$dir/full")
     val long = spark.read.option("header", "true").csv(s"$dir/long")
     assert(full.count() == 3)
