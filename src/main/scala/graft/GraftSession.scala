@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
@@ -24,8 +26,7 @@ object GraftSession {
     * cluster deployments.
     */
   def builder(appName: String = "graft", cores: Int = 32): SparkSession.Builder = {
-    val base = SparkSession
-      .builder()
+    val base = SparkSession.builder()
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
@@ -53,6 +54,11 @@ object GraftSession {
   def get(appName: String = "graft", cores: Int = 32): SparkSession = {
     val spark = builder(appName, cores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // A glob read makes FileStreamSink.hasMetadata probe the glob string
+    // as a literal path, which logs a full FileNotFoundException stack
+    // trace at WARN on every read. The probe's failure is expected.
+    Configurator.setLevel(
+      "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink", Level.ERROR)
     graft.functions.GraftFunctions.register(spark)
     spark
   }

@@ -9,23 +9,15 @@ import java.nio.file.{Files, Paths}
   *
   *   sbt "runMain graft.PlanDump <sfDir> <outDir> <tag> <q1,q2,...>"
   *
-  * Reads the same env contract as Bench (`SPARK_GRAFT_CPUS`); pure
-  * planning — nothing executes, nothing is written besides the text
-  * files.
+  * Plans under the bench's own session (`GraftSession`, `SPARK_GRAFT_CPUS`,
+  * default 32); pure planning — nothing executes, nothing is written
+  * besides the text files.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, tag, names) = args.take(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
+    val cpus = Env.int(sys.env, "SPARK_GRAFT_CPUS").getOrElse(32)
+    val spark = GraftSession.get("plandump", cpus)
     Files.createDirectories(Paths.get(outDir))
     names.split(",").map(_.trim).filter(_.nonEmpty).foreach { n =>
       try {

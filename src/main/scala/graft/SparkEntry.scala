@@ -30,13 +30,13 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q01_trace_pipeline")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  /** One entry per implemented operator from SURVEY.md §2, built once. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
     registry.map(q => q.name -> q.run).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops.
     */
-  def oracleSql: Map[String, String] =
+  val oracleSql: Map[String, String] =
     registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
 }

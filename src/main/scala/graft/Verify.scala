@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -21,15 +20,8 @@ object Verify {
           "already exists (use a fresh outDir for subset runs)")
       sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
+    val cpus = Env.int(sys.env, "SPARK_GRAFT_CPUS").getOrElse(4)
+    val spark = GraftSession.get("verify", cpus)
     new java.io.File(outDir).mkdirs()
     // A failed query must leave a VISIBLE artifact, not a silent absence:
     // round 12 lost 14 broken queries from CORRECTNESS because the catch

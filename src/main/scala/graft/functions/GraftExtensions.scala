@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * expressions into a session's function registry AT BUILD TIME —
   *
   * {{{
-  * SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
+  * GraftSession.builder().withExtensions(new GraftExtensions).getOrCreate()
   * // or, config-only (no code changes in the launching app):
   * // --conf spark.sql.extensions=graft.functions.GraftExtensions
   * }}}

@@ -499,7 +499,7 @@ object Dedup {
     // sides are the same sketch subtree, and neither broadcast (no
     // exchange for reuse to latch onto) nor the SMJ path (AQE
     // materializes both stages despite sameResult-identical exchanges —
-    // verified with graft.tools.TimeQuery2) dedupes it, so the vote
+    // verified by timing it cold and warm) dedupes it, so the vote
     // aggregation runs twice per mine. The remedy at scale is the
     // engine's build-once/probe-many pattern (materialize the sketch or
     // the pair table, as DupGraphPhases.build does for the MinHash

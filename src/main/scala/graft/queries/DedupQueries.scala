@@ -39,25 +39,27 @@ object DedupQueries {
     * band join's hot bucket alone emits ~2M candidate pairs while the
     * star mine emits one edge per member. The signature mine is the
     * shared per-corpus cost (materialized ONCE as a table, its own
-    * single-timed line — the production shape: a pair former never
+    * build line — the production shape: a pair former never
     * re-mines signatures, and timing the mine inside both faces
     * measured the mine 3x/2x instead of the stage under comparison),
     * so the star and uncapped lines time the PAIR-FORMING stage alone,
-    * identical input, identical materialization; the uncapped twin
-    * runs on the settled-comparator cadence.
+    * identical input, identical materialization.
     */
   private def fullSigTable(dir: String) = s"graft_fullsig_${Q.scratchTag(dir)}"
   private val fullSigDone =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   def ensureFullSignatures(spark: org.apache.spark.sql.SparkSession, dir: String): Unit =
-    if (!fullSigDone.contains(fullSigTable(dir))) {
-      graft.operators.Bucketing.dropWithLocation(spark, fullSigTable(dir))
-      Dedup.minhashSignatures(
-          Tables.documents(spark, dir), "text", "doc_id", NumHashes)
-        .write.format("parquet").saveAsTable(fullSigTable(dir))
-      fullSigDone.add(fullSigTable(dir))
-    }
+    if (!fullSigDone.contains(fullSigTable(dir))) buildFullSignatures(spark, dir)
+
+  /** Force (re)build of the full-corpus signature table. */
+  def buildFullSignatures(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
+    graft.operators.Bucketing.dropWithLocation(spark, fullSigTable(dir))
+    Dedup.minhashSignatures(
+        Tables.documents(spark, dir), "text", "doc_id", NumHashes)
+      .write.format("parquet").saveAsTable(fullSigTable(dir))
+    fullSigDone.add(fullSigTable(dir))
+  }
 
   def starFullMine(spark: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
     ensureFullSignatures(spark, dir)
@@ -459,7 +461,10 @@ object DedupQueries {
           .select(col("doc_a"), col("doc_b"), col("shared_bands"),
             Sampling.splitLabel(col("doc_a"), salt = "split1:").as("split_a"),
             Sampling.splitLabel(col("doc_b"), salt = "split1:").as("split_b"))
-          .filter(col("split_a") =!= col("split_b"))
+          .filter(col("split_a") =!= col("split_b")),
+      bench = Seq(
+        Phase.build("dupgraph_build")(DupGraphPhases.build),
+        Phase.Self)
     ),
     Q(
       "q106_dup_overlap_matrix",
@@ -796,7 +801,10 @@ object DedupQueries {
       },
       (spark, dir) =>
         DupGraphPhases.ranks(spark, dir)
-          .select(col("id").as("doc_id"), col("rank"))
+          .select(col("id").as("doc_id"), col("rank")),
+      bench = Seq(
+        Phase.build("dupgraph_derive")(DupGraphPhases.buildDerived),
+        Phase.Self)
     ),
     Q(
       "q142_canonical_by_rank",
@@ -1001,7 +1009,10 @@ object DedupQueries {
         docs.filter(col("doc_id") % 2 === 1).select("doc_id")
           .join(routed, col("doc_id") === col("inc_id"), "left")
           .select(col("doc_id"), col("canonical_id"))
-      }
+      },
+      bench = Seq(
+        Phase.build("dupgraph_serving")(DupGraphPhases.buildServing),
+        Phase.Self)
     ),
     Q(
       "q145_incremental_components",
@@ -1213,7 +1224,10 @@ object DedupQueries {
           .join(DupGraphPhases.touchedIds(spark, dir), Seq("id"), "left_anti")
         recomputed.unionByName(untouched)
           .select(col("id").as("doc_id"), col("rank"))
-      }
+      },
+      bench = Seq(
+        Phase.build("dupgraph_touched")(DupGraphPhases.buildTouched),
+        Phase.Self)
     ),
     Q(
       "q150_incremental_canonicals",
@@ -1372,7 +1386,13 @@ object DedupQueries {
           .join(DupGraphPhases.refreshedServing(spark, dir),
             col("doc_id") === col("id"))
           .select(col("doc_id"), col("comp").as("canonical_id"))
-      }
+      },
+      bench = Seq(
+        // a ~2% batch (the incremental regime) and the fixture's 50% batch;
+        // read both against dupgraph_serving, the full rebuild
+        Phase.build("dupgraph_refresh_delta")(DupGraphPhases.refreshServingSmallDelta),
+        Phase.build("dupgraph_refresh")(DupGraphPhases.refreshServing),
+        Phase.Self)
     ),
     Q(
       "q154_refresh_small_delta",
@@ -1470,7 +1490,10 @@ object DedupQueries {
            |  UNION ALL SELECT c FROM tri
            |)
            |SELECT doc_id, count(*) AS n_triangles FROM m GROUP BY 1""".stripMargin),
-      (spark, dir) => TrianglePhases.counts(spark, dir)
+      (spark, dir) => TrianglePhases.counts(spark, dir),
+      bench = Seq(
+        Phase.build("q167_tri_build")(TrianglePhases.build),
+        Phase.Self)
     ),
     Q(
       "q168_clustering_coefficient",
@@ -1706,7 +1729,19 @@ object DedupQueries {
           "doc_a", "doc_b", dedupTouched = false)
         Triangles.classesFromFingerprints(folded)
           .select(col("cls"), col("s")).distinct()
-      }
+      },
+      bench = Seq(
+        Phase.build("q173_twinfp_stored_build")(TwinFoldPhases.buildStored),
+        Phase.Self,
+        // the fold in its winning regime (bounded-degree delta) vs a rebuild
+        Phase("q173_bounded_fold", TwinFoldPhases.boundedFold),
+        Phase("q173_bounded_rebuild", TwinFoldPhases.boundedRebuild),
+        // the same delta over a 16x stored graph: fold flat, rebuild growing
+        Phase.build("q173_scaledfp_build")(TwinFoldPhases.buildScaled),
+        Phase("q173_scaled16_fold", TwinFoldPhases.scaledFold),
+        Phase("q173_scaled16_rebuild", TwinFoldPhases.scaledRebuild),
+        // core-scaling probe of the fingerprint exchange alone
+        Phase("q173_scaledfp_hash", TwinFoldPhases.scaledFingerprintHash))
     ),
     Q(
       "q174_setsim_exact",
@@ -1809,7 +1844,11 @@ object DedupQueries {
         "converges within the bound — equality needs no convergence " +
         "assumption.",
       Some(duckTrussPeelSql),
-      (spark, dir) => TrianglePhases.peeledCanonicals(spark, dir)
+      (spark, dir) => TrianglePhases.peeledCanonicals(spark, dir),
+      bench = Seq(
+        // buildPeeled, not ensurePeeled: the memo would time a no-op
+        Phase.build("q176_peel_build")(TrianglePhases.buildPeeled),
+        Phase.Self)
     ),
     Q(
       "q178_triangle_refresh",
@@ -1828,7 +1867,15 @@ object DedupQueries {
         "oracle floods merged-graph triangles by brute enumeration, so " +
         "the fold + collapse arithmetic is checked doc for doc.",
       Some(duckMergedTriangleSql),
-      (spark, dir) => TrianglePhases.refreshedCounts(spark, dir)
+      (spark, dir) => TrianglePhases.refreshedCounts(spark, dir),
+      bench = Seq(
+        Phase.build("q178_twinffp_fold")(TwinFoldPhases.buildFolded),
+        Phase.build("q178_tri_refresh")(TrianglePhases.refresh),
+        Phase.Self,
+        // refresh vs rebuild at the 16x geometry, where the gap is measurable
+        Phase.build("q178_scaledffp_fold")(TwinFoldPhases.buildFoldedScaled),
+        Phase.build("q178_scaled16_refresh")(TrianglePhases.scaledRefresh),
+        Phase.build("q178_scaled16_rebuild")(TrianglePhases.scaledRebuildMerged))
     ),
     Q(
       "q179_containment_capped",
@@ -2070,7 +2117,10 @@ object DedupQueries {
         "form needs its build side distinct). Same semantics as q190 " +
         "by design; the oracle is literally the same SQL body.",
       Some(duckCdcIngestSql),
-      (spark, dir) => CdcPhases.probe(spark, dir)
+      (spark, dir) => CdcPhases.probe(spark, dir),
+      bench = Seq(
+        Phase.build("cdcfp_build")(CdcPhases.buildStored),
+        Phase.Self)
     ),
     Q(
       "q219_minhash_error_audit",
@@ -2243,7 +2293,13 @@ object DedupQueries {
           "text", "doc_id", NumHashes)
         Dedup.lshCandidatePairsStarCapped(
           sig, "doc_id", NumHashes, bands = 2, maxBucket = StarCap)
-      }
+      },
+      bench = Seq(
+        // the full-corpus mine, star-collapsed vs uncapped (production geometry)
+        Phase.build("q226_sig_mine_full")(buildFullSignatures),
+        Phase("q226_star_mine_full", starFullMine),
+        Phase("q226_uncapped_mine_full", uncappedFullMine),
+        Phase.Self)
     ),
     Q(
       "q227_star_components",

@@ -786,7 +786,10 @@ object ModelQueries {
         graft.operators.Sampling.fillTokenBudget(
           scored, "source", "quality", "doc_id", "n_tokens",
           budget = BpeBudget)
-      }
+      },
+      bench = Seq(
+        Phase.build("semkept_build")(SemKeptPhases.buildStored),
+        Phase.Self)
     ),
     Q(
       "q206_bpe_token_budget",
@@ -817,7 +820,10 @@ object ModelQueries {
         graft.operators.Sampling.fillTokenBudget(
           scored, "source", "quality", "doc_id", "n_tokens",
           budget = BpeBudget)
-      }
+      },
+      bench = Seq(
+        Phase.build("bpeenc_build")(BpeEncPhases.buildStored),
+        Phase.Self)
     ),
     Q(
       "q209_token_fertility_screen",

@@ -14,12 +14,37 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    through exact DECIMAL accumulation then one cast to DOUBLE; embedding
   *    math uses an explicitly sequential double fold that both engines
   *    reproduce bit-for-bit.
+  *
+  * `bench` is the ordered list of lines `graft.Bench` times for this
+  * query's family: amortized build steps, comparators and the query's own
+  * line ([[Phase.Self]]). The default is the query alone.
   */
 final case class Q(
     name: String,
     doc: String,
     oracle: Option[String],
-    run: (SparkSession, String) => DataFrame)
+    run: (SparkSession, String) => DataFrame,
+    bench: Seq[Phase] = Seq(Phase.Self)) {
+
+  /** The family's bench lines with [[Phase.Self]] resolved to this query. */
+  def benchLines: Seq[Phase] =
+    bench.map(p => if (p eq Phase.Self) Phase(name, run) else p)
+}
+
+/** One timed bench line: its name and the frame it runs to completion. */
+final case class Phase(name: String, run: (SparkSession, String) => DataFrame)
+
+object Phase {
+
+  /** Placeholder for the declaring query's own line. */
+  val Self: Phase = Phase("<self>", (s, _) => s.emptyDataFrame)
+
+  /** A build step: `f` runs for its side effects (a stored table, a
+    * checkpointed artifact) and the line times it end to end.
+    */
+  def build(name: String)(f: (SparkSession, String) => Any): Phase =
+    Phase(name, (s, d) => { f(s, d); s.emptyDataFrame })
+}
 
 object Q {
   /** Input-dir-keyed tag for scratch paths / table names, so concurrent

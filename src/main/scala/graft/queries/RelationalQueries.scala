@@ -1,5 +1,8 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
@@ -90,6 +93,124 @@ object RelationalQueries {
          |     (SELECT CAST(COUNT(*) AS BIGINT) AS actual
          |      FROM $l JOIN $r ON $lk = $rk)""".stripMargin }
     .mkString("\nUNION ALL\n")
+
+  /** Rule pairs: each registry line below runs its query text in a child
+    * session WITH its optimizer rule; each `twin` runs the SAME text in a
+    * child session without it (or with a weaker rule), so a pair's timing
+    * difference is exactly the rule's plan decision. */
+  private val NoBroadcast = "spark.sql.autoBroadcastJoinThreshold" -> "-1"
+  private val NoAqe = "spark.sql.adaptive.enabled" -> "false"
+  private val NonAnsi = "spark.sql.ansi.enabled" -> "false"
+
+  private def twin(
+      name: String,
+      text: (SparkSession, String) => DataFrame,
+      rules: (SparkSession, String) => Seq[Rule[LogicalPlan]] = (_, _) => Nil)(
+      confs: (String, String)*): Phase =
+    Phase(name, (s, d) => text(graft.plans.CatalogRules.sessionWith(s, rules(s, d), confs: _*), d))
+
+  private def eagerRule(s: SparkSession, d: String): Seq[Rule[LogicalPlan]] =
+    Seq(graft.plans.EagerAggregationRule(StatsPhases.collected(s, d)))
+
+  private def q244Text(s: SparkSession, d: String): DataFrame =
+    Tables.lineitem(s, d)
+      .join(Tables.supplier(s, d), col("l_suppkey") === col("s_suppkey"))
+      .groupBy("s_name")
+      .agg(count(lit(1)).as("cnt"),
+        sum(col("l_quantity").cast("decimal(18,4)")).cast("double").as("sum_qty"))
+
+  private def q245Text(s: SparkSession, d: String): DataFrame =
+    Tables.lineitem(s, d)
+      .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
+      .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
+      .groupBy("c_mktsegment")
+      .agg(count(lit(1)).as("cnt"),
+        sum(col("l_extendedprice").cast("decimal(18,4)")).cast("double").as("sum_price"))
+
+  private def q249Text(s: SparkSession, d: String): DataFrame =
+    Tables.lineitem(s, d)
+      .groupBy("l_returnflag", "l_linestatus")
+      .agg(
+        count(lit(1)).as("cnt"),
+        sum(col("l_quantity").cast("decimal(18,4)")).cast("double").as("sum_qty"),
+        sum(col("l_extendedprice").cast("decimal(18,4)")).cast("double").as("sum_price"),
+        min(col("l_quantity")).as("min_qty"),
+        max(col("l_extendedprice")).as("max_price"))
+
+  private def q262Text(s: SparkSession, d: String): DataFrame =
+    Tables.lineitem(s, d)
+      .filter(col("l_quantity") >= 49.0)
+      .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
+      .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
+      .groupBy("c_mktsegment")
+      .agg(count(lit(1)).as("cnt"),
+        sum(col("l_extendedprice").cast("decimal(18,4)")).cast("double").as("sum_price"))
+
+  private def q264Text(s: SparkSession, d: String): DataFrame =
+    Tables.lineitem(s, d)
+      .join(Tables.supplier(s, d), col("l_suppkey") === col("s_suppkey"))
+      .groupBy("s_name")
+      .agg(count(lit(1)).as("cnt"),
+        sum(col("l_quantity").cast("bigint")).as("sum_qty"),
+        max(col("l_extendedprice")).as("max_price"))
+
+  private def q266Text(s: SparkSession, d: String): DataFrame =
+    hourlyEvents(Tables.eventsTsNs(s, d))
+
+  /** 473712 * HourNs is an exact hour boundary inside the fixture's
+    * [473352, 474071] hour range. */
+  private def q269Text(s: SparkSession, d: String): DataFrame =
+    hourlyEvents(Tables.eventsTsNs(s, d)
+      .filter(col("ts") >= lit(473712L * MvPhases.HourNs)))
+
+  private def hourlyEvents(ev: DataFrame): DataFrame =
+    ev.groupBy(
+        expr(graft.operators.Resample.floorDivSql("ts", MvPhases.HourNs)).as("hour_idx"),
+        col("event_type"))
+      .agg(count(lit(1)).as("cnt"),
+        sum(col("value").cast("decimal(18,4)")).cast("double").as("sum_value"))
+
+  private def q268Text(s: SparkSession, d: String): DataFrame = {
+    val a = Tables.lineitem(s, d)
+    val b = Tables.lineitem(s, d)
+    a.join(b, a("l_orderkey") === b("l_orderkey") &&
+        a("l_linenumber") === b("l_linenumber"))
+      .join(Tables.orders(s, d), a("l_orderkey") === col("o_orderkey"))
+      .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
+      .groupBy("c_mktsegment")
+      .agg(count(lit(1)).as("cnt"), sum(b("l_quantity").cast("bigint")).as("sum_qty"))
+  }
+
+  // rollup(col(...)) not rollup("..."): the String overload resolves
+  // through Dataset.col, whose dataset-id metadata trips
+  // DetectAmbiguousSelfJoin when the Expand duplicates it
+  private def q270Text(s: SparkSession, d: String): DataFrame =
+    Tables.lineitem(s, d)
+      .join(Tables.supplier(s, d), col("l_suppkey") === col("s_suppkey"))
+      .rollup(col("s_name"))
+      .agg(count(lit(1)).as("cnt"),
+        sum(col("l_quantity").cast("decimal(18,4)")).cast("double").as("sum_qty"))
+
+  private def q272Text(s: SparkSession, d: String): DataFrame =
+    Tables.lineitem(s, d)
+      .join(Tables.supplier(s, d), col("l_suppkey") === col("s_suppkey"))
+      .groupBy("l_returnflag", "s_name")
+      .agg(count(lit(1)).as("cnt"), sum(col("l_quantity").cast("bigint")).as("sum_qty"))
+
+  private def q273Text(s: SparkSession, d: String): DataFrame =
+    Tables.lineitem(s, d)
+      .join(Tables.supplier(s, d), col("l_suppkey") === col("s_suppkey"))
+      .rollup(col("l_returnflag"), col("s_name"))
+      .agg(count(lit(1)).as("cnt"), sum(col("l_quantity").cast("bigint")).as("sum_qty"))
+
+  private def q274Text(s: SparkSession, d: String): DataFrame =
+    Tables.lineitem(s, d)
+      .join(Tables.supplier(s, d), col("l_suppkey") === col("s_suppkey"))
+      .join(Tables.nation(s, d), col("s_nationkey") === col("n_nationkey"))
+      .groupBy("n_name")
+      .agg(count(lit(1)).as("cnt"),
+        sum(col("l_quantity").cast("bigint")).as("sum_qty"),
+        sum(col("l_extendedprice").cast("decimal(18,4)")).cast("double").as("sum_price"))
 
   val all: Seq[Q] = Seq(
     Q(
@@ -639,7 +760,10 @@ object RelationalQueries {
       (spark, dir) => {
         BucketedJoinPhases.build(spark, dir)
         BucketedJoinPhases.probe(spark, dir)
-      }
+      },
+      bench = Seq(
+        Phase.build("q64_bucketed_build")(BucketedJoinPhases.build),
+        Phase("q64_bucketed_join", BucketedJoinPhases.probe))
     ),
     Q(
       "q65_explode_pos",
@@ -1657,15 +1781,10 @@ object RelationalQueries {
         val st = StatsPhases.collected(spark, dir)
         val child = CatalogRules.sessionWith(spark,
           Seq(CatalogBroadcastRule(st.tables.map { case (t, s) => t -> s.rows })),
-          "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-        Tables.lineitem(child, dir)
-          .join(Tables.supplier(child, dir),
-            col("l_suppkey") === col("s_suppkey"))
-          .groupBy("s_name")
-          .agg(count(lit(1)).as("cnt"),
-            sum(col("l_quantity").cast("decimal(18,4)")).cast("double")
-              .as("sum_qty"))
-      }
+          NoBroadcast)
+        q244Text(child, dir)
+      },
+      bench = Seq(twin("q244_ruleoff_smj", q244Text)(NoBroadcast), Phase.Self)
     ),
     Q(
       "q245_rule_join_order",
@@ -1695,19 +1814,10 @@ object RelationalQueries {
       (spark, dir) => {
         import graft.plans.{CatalogJoinOrderRule, CatalogRules}
         val st = StatsPhases.collected(spark, dir)
-        val child = CatalogRules.sessionWith(spark,
-          Seq(CatalogJoinOrderRule(st)),
-          "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-        Tables.lineitem(child, dir)
-          .join(Tables.orders(child, dir),
-            col("l_orderkey") === col("o_orderkey"))
-          .join(Tables.customer(child, dir),
-            col("o_custkey") === col("c_custkey"))
-          .groupBy("c_mktsegment")
-          .agg(count(lit(1)).as("cnt"),
-            sum(col("l_extendedprice").cast("decimal(18,4)")).cast("double")
-              .as("sum_price"))
-      }
+        q245Text(CatalogRules.sessionWith(spark,
+          Seq(CatalogJoinOrderRule(st)), NoBroadcast), dir)
+      },
+      bench = Seq(twin("q245_ruleoff_written", q245Text)(NoBroadcast), Phase.Self)
     ),
     Q(
       "q246_rule_conjunct_order",
@@ -1742,7 +1852,10 @@ object RelationalQueries {
           .agg(count(lit(1)).as("cnt"),
             sum(col("l_extendedprice").cast("decimal(18,4)")).cast("double")
               .as("sum_price"))
-      }
+      },
+      bench = Seq(
+        Phase.build("histcat_build")(HistPhases.buildStored),
+        Phase.Self)
     ),
     Q(
       "q247_rule_join_order4",
@@ -1918,17 +2031,12 @@ object RelationalQueries {
         val child = CatalogRules.sessionWith(spark, Nil)
         CatalogRules.installRules(child,
           Seq(MvRewriteRule(Seq(MvPhases.mvDef(child, dir)))))
-        Tables.lineitem(child, dir)
-          .groupBy("l_returnflag", "l_linestatus")
-          .agg(
-            count(lit(1)).as("cnt"),
-            sum(col("l_quantity").cast("decimal(18,4)")).cast("double")
-              .as("sum_qty"),
-            sum(col("l_extendedprice").cast("decimal(18,4)")).cast("double")
-              .as("sum_price"),
-            min(col("l_quantity")).as("min_qty"),
-            max(col("l_extendedprice")).as("max_price"))
-      }
+        q249Text(child, dir)
+      },
+      bench = Seq(
+        Phase.build("mv_build")(MvPhases.buildStored),
+        twin("q249_ruleoff_base", q249Text)(),
+        Phase.Self)
     ),
     Q(
       "q250_mv_rewrite_coarser",
@@ -2138,7 +2246,10 @@ object RelationalQueries {
           .agg(count(lit(1)).as("cnt"),
             sum(col("l_extendedprice").cast("decimal(18,4)")).cast("double")
               .as("sum_price"))
-      }
+      },
+      bench = Seq(
+        Phase.build("mcvcat_build")(McvPhases.buildStored),
+        Phase.Self)
     ),
     Q(
       "q255_mv_sk_incremental",
@@ -2470,18 +2581,14 @@ object RelationalQueries {
           McvPhases.collectedMcvs(spark, dir))
         val child = CatalogRules.sessionWith(spark,
           Seq(CatalogJoinOrderRule(StatsPhases.collected(spark, dir), Some(est))),
-          "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-        Tables.lineitem(child, dir)
-          .filter(col("l_quantity") >= 49.0)
-          .join(Tables.orders(child, dir),
-            col("l_orderkey") === col("o_orderkey"))
-          .join(Tables.customer(child, dir),
-            col("o_custkey") === col("c_custkey"))
-          .groupBy("c_mktsegment")
-          .agg(count(lit(1)).as("cnt"),
-            sum(col("l_extendedprice").cast("decimal(18,4)")).cast("double")
-              .as("sum_price"))
-      }
+          NoBroadcast)
+        q262Text(child, dir)
+      },
+      bench = Seq(
+        // the same rule fed no selectivity estimator: the filter-blind order
+        twin("q262_blindorder", q262Text, (s, d) => Seq(
+          graft.plans.CatalogJoinOrderRule(StatsPhases.collected(s, d))))(NoBroadcast),
+        Phase.Self)
     ),
     Q(
       "q263_rule_conjunct_inlist",
@@ -2556,17 +2663,16 @@ object RelationalQueries {
         val st = StatsPhases.collected(spark, dir)
         // non-ANSI by contract: the integral-SUM fold's associativity
         // proof is wraparound addition, which ANSI eval voids
-        val child = CatalogRules.sessionWith(spark,
-          Seq(EagerAggregationRule(st)),
-          "spark.sql.ansi.enabled" -> "false")
-        Tables.lineitem(child, dir)
-          .join(Tables.supplier(child, dir),
-            col("l_suppkey") === col("s_suppkey"))
-          .groupBy("s_name")
-          .agg(count(lit(1)).as("cnt"),
-            sum(col("l_quantity").cast("bigint")).as("sum_qty"),
-            max(col("l_extendedprice")).as("max_price"))
-      }
+        q264Text(CatalogRules.sessionWith(spark,
+          Seq(EagerAggregationRule(st)), NonAnsi), dir)
+      },
+      bench = Seq(
+        twin("q264_ruleoff_rowgrain", q264Text)(NonAnsi),
+        // the shuffle regime (no broadcast, AQE off), eager aggregation's
+        // home turf: rowgrain exchanges every fact row, eager ndv(fk) partials
+        twin("q264_smj_rowgrain", q264Text)(NoBroadcast, NoAqe, NonAnsi),
+        twin("q264_smj_eager", q264Text, eagerRule)(NoBroadcast, NoAqe, NonAnsi),
+        Phase.Self)
     ),
     Q(
       "q265_mv_rollup_cube",
@@ -2643,15 +2749,12 @@ object RelationalQueries {
         val child = CatalogRules.sessionWith(spark, Nil)
         CatalogRules.installRules(child,
           Seq(MvRewriteRule(Seq(MvPhases.mvDefTs(child, dir)))))
-        Tables.eventsTsNs(child, dir)
-          .groupBy(
-            expr(graft.operators.Resample.floorDivSql("ts", MvPhases.HourNs))
-              .as("hour_idx"),
-            col("event_type"))
-          .agg(count(lit(1)).as("cnt"),
-            sum(col("value").cast("decimal(18,4)")).cast("double")
-              .as("sum_value"))
-      }
+        q266Text(child, dir)
+      },
+      bench = Seq(
+        Phase.build("mvts_build")(MvPhases.buildStoredTs),
+        twin("q266_ruleoff_events", q266Text)(),
+        Phase.Self)
     ),
     Q(
       "q267_mv_ts_incremental",
@@ -2718,21 +2821,10 @@ object RelationalQueries {
       (spark, dir) => {
         import graft.plans.{CatalogRules, CatalogJoinOrderRule}
         val st = StatsPhases.collected(spark, dir)
-        val child = CatalogRules.sessionWith(spark,
-          Seq(CatalogJoinOrderRule(st)),
-          "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-        val a = Tables.lineitem(child, dir)
-        val b = Tables.lineitem(child, dir)
-        a.join(b, a("l_orderkey") === b("l_orderkey") &&
-            a("l_linenumber") === b("l_linenumber"))
-          .join(Tables.orders(child, dir),
-            a("l_orderkey") === col("o_orderkey"))
-          .join(Tables.customer(child, dir),
-            col("o_custkey") === col("c_custkey"))
-          .groupBy("c_mktsegment")
-          .agg(count(lit(1)).as("cnt"),
-            sum(b("l_quantity").cast("bigint")).as("sum_qty"))
-      }
+        q268Text(CatalogRules.sessionWith(spark,
+          Seq(CatalogJoinOrderRule(st)), NoBroadcast), dir)
+      },
+      bench = Seq(twin("q268_ruleoff_written", q268Text)(NoBroadcast), Phase.Self)
     ),
     Q(
       "q269_mv_bucket_aligned_filter",
@@ -2766,18 +2858,30 @@ object RelationalQueries {
         val child = CatalogRules.sessionWith(spark, Nil)
         CatalogRules.installRules(child,
           Seq(MvRewriteRule(Seq(MvPhases.mvDefTs(child, dir)))))
-        // 473712 * HourNs — an exact hour boundary inside the fixture's
-        // [473352, 474071] hour range
-        Tables.eventsTsNs(child, dir)
-          .filter(col("ts") >= lit(473712L * MvPhases.HourNs))
-          .groupBy(
-            expr(graft.operators.Resample.floorDivSql("ts", MvPhases.HourNs))
-              .as("hour_idx"),
-            col("event_type"))
-          .agg(count(lit(1)).as("cnt"),
-            sum(col("value").cast("decimal(18,4)")).cast("double")
-              .as("sum_value"))
-      }
+        q269Text(child, dir)
+      },
+      // Timed on the 16x wide events fixture, where the avoided scan is
+      // large enough to separate cells from scan: the same text scans
+      // the wide table (q269w_scan16) or reads the wide rollup's cells.
+      // The build line rebuilds the whole instrument on every run.
+      bench = Seq(
+        Phase.build("wide_events_build") { (s, d) =>
+          WidePhases.build(s, d)
+          MvPhases.buildStoredTsWide(s, d)
+          WidePhases.freshStats(s, d)
+        },
+        Phase("q269w_scan16", (s, d) => q269Text(
+          graft.plans.CatalogRules.sessionWith(s, Nil), WidePhases.ensureBuilt(s, d))),
+        Phase("q269w_cells", (s, d) => {
+          import graft.plans.{CatalogRules, MvRewriteRule}
+          val wd = WidePhases.ensureBuilt(s, d)
+          MvPhases.ensureStoredTsWide(s, d)
+          val child = CatalogRules.sessionWith(s, Nil)
+          CatalogRules.installRules(child,
+            Seq(MvRewriteRule(Seq(MvPhases.mvDefTsWide(child, d)))))
+          q269Text(child, wd)
+        }),
+        Phase.Self)
     ),
     Q(
       "q270_mv_rollup_join",
@@ -2812,17 +2916,9 @@ object RelationalQueries {
         val child = CatalogRules.sessionWith(spark, Nil)
         CatalogRules.installRules(child,
           Seq(MvRewriteRule(Seq(MvPhases.mvDefSk(child, dir)), st)))
-        Tables.lineitem(child, dir)
-          .join(Tables.supplier(child, dir),
-            col("l_suppkey") === col("s_suppkey"))
-          // rollup(col(...)) not rollup("..."): the String overload
-          // resolves through Dataset.col, whose dataset-id metadata
-          // trips DetectAmbiguousSelfJoin when the Expand duplicates it
-          .rollup(col("s_name"))
-          .agg(count(lit(1)).as("cnt"),
-            sum(col("l_quantity").cast("decimal(18,4)")).cast("double")
-              .as("sum_qty"))
-      }
+        q270Text(child, dir)
+      },
+      bench = Seq(twin("q270_ruleoff_rowgrain", q270Text)(), Phase.Self)
     ),
     Q(
       "q271_eager_avg",
@@ -2894,16 +2990,10 @@ object RelationalQueries {
       (spark, dir) => {
         import graft.plans.{CatalogRules, EagerAggregationRule}
         val st = StatsPhases.collected(spark, dir)
-        val child = CatalogRules.sessionWith(spark,
-          Seq(EagerAggregationRule(st)),
-          "spark.sql.ansi.enabled" -> "false")
-        Tables.lineitem(child, dir)
-          .join(Tables.supplier(child, dir),
-            col("l_suppkey") === col("s_suppkey"))
-          .groupBy("l_returnflag", "s_name")
-          .agg(count(lit(1)).as("cnt"),
-            sum(col("l_quantity").cast("bigint")).as("sum_qty"))
-      }
+        q272Text(CatalogRules.sessionWith(spark,
+          Seq(EagerAggregationRule(st)), NonAnsi), dir)
+      },
+      bench = Seq(twin("q272_ruleoff_rowgrain", q272Text)(NonAnsi), Phase.Self)
     ),
     Q(
       "q273_eager_rollup",
@@ -2936,18 +3026,10 @@ object RelationalQueries {
       (spark, dir) => {
         import graft.plans.{CatalogRules, EagerAggregationRule}
         val st = StatsPhases.collected(spark, dir)
-        val child = CatalogRules.sessionWith(spark,
-          Seq(EagerAggregationRule(st)),
-          "spark.sql.ansi.enabled" -> "false")
-        Tables.lineitem(child, dir)
-          .join(Tables.supplier(child, dir),
-            col("l_suppkey") === col("s_suppkey"))
-          // col(...) not String overloads: Dataset.col's dataset-id
-          // metadata trips DetectAmbiguousSelfJoin under the Expand
-          .rollup(col("l_returnflag"), col("s_name"))
-          .agg(count(lit(1)).as("cnt"),
-            sum(col("l_quantity").cast("bigint")).as("sum_qty"))
-      }
+        q273Text(CatalogRules.sessionWith(spark,
+          Seq(EagerAggregationRule(st)), NonAnsi), dir)
+      },
+      bench = Seq(twin("q273_ruleoff_rowgrain", q273Text)(NonAnsi), Phase.Self)
     ),
     Q(
       "q274_eager_chain",
@@ -2982,20 +3064,15 @@ object RelationalQueries {
       (spark, dir) => {
         import graft.plans.{CatalogRules, EagerAggregationRule}
         val st = StatsPhases.collected(spark, dir)
-        val child = CatalogRules.sessionWith(spark,
-          Seq(EagerAggregationRule(st)),
-          "spark.sql.ansi.enabled" -> "false")
-        Tables.lineitem(child, dir)
-          .join(Tables.supplier(child, dir),
-            col("l_suppkey") === col("s_suppkey"))
-          .join(Tables.nation(child, dir),
-            col("s_nationkey") === col("n_nationkey"))
-          .groupBy("n_name")
-          .agg(count(lit(1)).as("cnt"),
-            sum(col("l_quantity").cast("bigint")).as("sum_qty"),
-            sum(col("l_extendedprice").cast("decimal(18,4)")).cast("double")
-              .as("sum_price"))
-      }
+        q274Text(CatalogRules.sessionWith(spark,
+          Seq(EagerAggregationRule(st)), NonAnsi), dir)
+      },
+      // shuffle regime only: the rowgrain side exchanges the fact once per
+      // chain join, the eager side ndv(l_suppkey) partials below the chain
+      bench = Seq(
+        twin("q274_smj_rowgrain", q274Text)(NoBroadcast, NoAqe, NonAnsi),
+        twin("q274_smj_eager", q274Text, eagerRule)(NoBroadcast, NoAqe, NonAnsi),
+        Phase.Self)
     ),
     Q(
       "q278_eager_chain_rollup",
@@ -3461,17 +3538,26 @@ object WidePhases {
     * out like a testdata dir (`<wd>/events.parquet`) so every loader
     * and rule identifies the table exactly as it would the original. */
   def ensureBuilt(spark: SparkSession, dir: String): String = synchronized {
+    if (!built.contains(wideDir(dir))) build(spark, dir)
+    wideDir(dir)
+  }
+
+  /** Force (re)write of the wide fixture. */
+  def build(spark: SparkSession, dir: String): Unit = synchronized {
     val wd = wideDir(dir)
-    if (!built.contains(wd)) {
-      val ev = Tables.eventsTsNs(spark, dir)
-      val wide = (0 until Factor).map(i =>
-          ev.withColumn("event_id",
-            col("event_id") + lit(i.toLong * 1000000000L)))
-        .reduce(_ unionByName _)
-      wide.write.mode("overwrite").parquet(s"$wd/events.parquet")
-      built.add(wd)
-    }
-    wd
+    val ev = Tables.eventsTsNs(spark, dir)
+    val wide = (0 until Factor).map(i =>
+        ev.withColumn("event_id",
+          col("event_id") + lit(i.toLong * 1000000000L)))
+      .reduce(_ unionByName _)
+    wide.write.mode("overwrite").parquet(s"$wd/events.parquet")
+    built.add(wd)
+  }
+
+  /** [[stats]], recomputed rather than served from the cache. */
+  def freshStats(spark: SparkSession, dir: String): graft.plans.CatalogRules.CatalogStats = {
+    statsCache.remove(dir)
+    stats(spark, dir)
   }
 
   /** The stats catalog a rule over the WIDE fixture plans from: the
@@ -3686,8 +3772,8 @@ object McvPhases {
   * lineitem pre-aggregated by (l_returnflag, l_linestatus) with
   * foldable partials (count, DECIMAL partial sums cast back to the
   * accumulation width so a re-sum reproduces the query's exact type,
-  * min/max). Built once per input dir at ingest (bench: `mv_build`,
-  * single-timed); the MvRewriteRule answers subsumed aggregates from
+  * min/max). Built once per input dir at ingest (bench: `mv_build`);
+  * the MvRewriteRule answers subsumed aggregates from
   * its handful of rows instead of the fact scan.
   */
 object MvPhases {
@@ -3999,14 +4085,17 @@ object MvPhases {
 
   def ensureStoredTsWide(spark: SparkSession, dir: String): Unit =
     synchronized {
-      if (!built.contains(tsTableWide(dir))) {
-        val wd = WidePhases.ensureBuilt(spark, dir)
-        val mv = partialsTs(Tables.eventsTsNs(spark, wd))
-        graft.operators.Bucketing.dropWithLocation(spark, tsTableWide(dir))
-        mv.write.format("parquet").saveAsTable(tsTableWide(dir))
-        built.add(tsTableWide(dir))
-      }
+      if (!built.contains(tsTableWide(dir))) buildStoredTsWide(spark, dir)
     }
+
+  /** Force (re)build of the wide time rollup. */
+  def buildStoredTsWide(spark: SparkSession, dir: String): Unit = synchronized {
+    val wd = WidePhases.ensureBuilt(spark, dir)
+    val mv = partialsTs(Tables.eventsTsNs(spark, wd))
+    graft.operators.Bucketing.dropWithLocation(spark, tsTableWide(dir))
+    mv.write.format("parquet").saveAsTable(tsTableWide(dir))
+    built.add(tsTableWide(dir))
+  }
 
   /** [[mvDefTs]] pointed at the wide fixture: base path pins the WIDE
     * events dir (a def over dir A must never answer dir B — including

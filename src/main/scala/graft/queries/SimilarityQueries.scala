@@ -168,7 +168,10 @@ object SimilarityQueries {
       (spark, dir) => {
         IvfPhases.indexBuild(spark, dir)
         IvfPhases.indexProbe(spark, dir)
-      }
+      },
+      bench = Seq(
+        Phase.build("q79_ivf_build")(IvfPhases.indexBuild),
+        Phase("q79_ann_ivf_index", IvfPhases.indexProbe))
     ),
     Q(
       "q85_ann_ivf_trained",
@@ -182,7 +185,10 @@ object SimilarityQueries {
       (spark, dir) => {
         IvfPhases.train(spark, dir)
         IvfPhases.trainedProbe(spark, dir)
-      }
+      },
+      bench = Seq(
+        Phase.build("q85_kmeans_train")(IvfPhases.train),
+        Phase("q85_ann_ivf_trained", IvfPhases.trainedProbe))
     ),
     Q(
       "q88_semantic_decontaminate",
@@ -572,7 +578,12 @@ object SimilarityQueries {
         "under arrivals moves recall-per-nprobe only (exact scoring of " +
         "probed cells), reset by the periodic re-train + compact.",
       Some(ivfOracleSqlCents("vec_id < 16 AND vec_id % 5 <> 4")),
-      (spark, dir) => IvfPhases.segProbe(spark, dir)
+      (spark, dir) => IvfPhases.segProbe(spark, dir),
+      bench = Seq(
+        // base build = one-shot ingest; the delta append is what each batch pays
+        Phase.build("q156_ivf_base_build")(IvfPhases.segBaseBuild),
+        Phase.build("q156_ivf_delta_append")(IvfPhases.segDeltaAppend),
+        Phase.Self)
     ),
     Q(
       "q158_two_stage_rerank",
@@ -996,7 +1007,10 @@ object SimilarityQueries {
         "IvfIndexSpec pins the same equality in-engine (probeSegments " +
         "before == probe after, and the reset delta is empty).",
       Some(ivfOracleSqlCents("vec_id < 16 AND vec_id % 5 <> 4")),
-      (spark, dir) => IvfPhases.cmpProbe(spark, dir)
+      (spark, dir) => IvfPhases.cmpProbe(spark, dir),
+      bench = Seq(
+        Phase.build("q228_ivf_compact")(IvfPhases.buildCompacted),
+        Phase.Self)
     )
   )
 
@@ -1450,15 +1464,18 @@ object IvfPhases {
     * the frozen base centroids.
     */
   def ensureCompacted(spark: SparkSession, dir: String): Unit =
-    if (!cmpDone.contains(cmpPrefix(dir))) {
-      graft.operators.IvfIndex.build(
-        Tables.embeddings(spark, dir).filter(col("vec_id") % 5 =!= 4),
-        "vec_id", "embedding", nlist = 16, prefix = cmpPrefix(dir))
-      graft.operators.IvfIndex.appendDelta(
-        segArrivals(spark, dir), "vec_id", "embedding", prefix = cmpPrefix(dir))
-      graft.operators.IvfIndex.compact(spark, prefix = cmpPrefix(dir))
-      cmpDone.add(cmpPrefix(dir))
-    }
+    if (!cmpDone.contains(cmpPrefix(dir))) buildCompacted(spark, dir)
+
+  /** Force (re)run of the whole lifecycle; each step overwrites. */
+  def buildCompacted(spark: SparkSession, dir: String): Unit = {
+    graft.operators.IvfIndex.build(
+      Tables.embeddings(spark, dir).filter(col("vec_id") % 5 =!= 4),
+      "vec_id", "embedding", nlist = 16, prefix = cmpPrefix(dir))
+    graft.operators.IvfIndex.appendDelta(
+      segArrivals(spark, dir), "vec_id", "embedding", prefix = cmpPrefix(dir))
+    graft.operators.IvfIndex.compact(spark, prefix = cmpPrefix(dir))
+    cmpDone.add(cmpPrefix(dir))
+  }
 
   /** Probe the COMPACTED base — a plain single-segment [[probe]], no
     * delta union — with q156's query slice and knobs, so the result

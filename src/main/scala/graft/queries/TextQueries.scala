@@ -1563,7 +1563,10 @@ object TextQueries {
         CountMin.merge(
           spark.table(CmPhases.cmTable(dir)),
           CountMin.sketch(arrivals, "tok", depth = 4, width = 64))
-      }
+      },
+      bench = Seq(
+        Phase.build("q162_cm_stored_build")(CmPhases.buildStored),
+        Phase.Self)
     ),
     Q(
       "q160_hll_sketch_fold",
@@ -1604,7 +1607,10 @@ object TextQueries {
           spark.table(HllPhases.registerTable(dir)),
           HyperLogLog.registers(arrivals, "tok", Seq("source"), p = 6),
           Seq("source"))
-      }
+      },
+      bench = Seq(
+        Phase.build("q160_hll_stored_build")(HllPhases.buildStored),
+        Phase.Self)
     ),
     Q(
       "q157_benchmark_fold",
@@ -1652,7 +1658,10 @@ object TextQueries {
           corpus = docs.filter(col("doc_id") % 10 =!= 0 && col("doc_id") % 10 =!= 5),
           newBenchmark = docs.filter(col("doc_id") % 10 === 5),
           textCol = "text", idCol = "doc_id")._1
-      }
+      },
+      bench = Seq(
+        Phase.build("q157_decontam_v1_build")(DecontamPhases.buildStored),
+        Phase.Self)
     ),
     Q(
       "q163_hdr_sketch_fold",
@@ -1694,7 +1703,10 @@ object TextQueries {
           spark.table(HdrPhases.hdrTable(dir)),
           HdrSketch.sketch(arrivals, "toks", Seq("source"), subBits = 4),
           Seq("source"))
-      }
+      },
+      bench = Seq(
+        Phase.build("q163_hdr_stored_build")(HdrPhases.buildStored),
+        Phase.Self)
     ),
     Q(
       "q164_kmv_fold",
@@ -1737,7 +1749,10 @@ object TextQueries {
           .select(col("source"),
             array_join(col("kmin").cast("array<string>"), ",").as("kmin"),
             col("n_docs"))
-      }
+      },
+      bench = Seq(
+        Phase.build("q164_kmv_stored_build")(KmvPhases.buildStored),
+        Phase.Self)
     ),
     Q(
       "q169_collocation_lift",
