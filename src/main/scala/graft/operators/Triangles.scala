@@ -376,13 +376,11 @@ object Triangles {
     * locally in exact long arithmetic — identical values, the same
     * formulas — and only the node-sized expansion join stays
     * distributed (against a broadcast LocalRelation). Quotients past
-    * the limit keep the distributed stages. 0 disables (spec hook).
+    * the limit keep the distributed stages. The default of each
+    * operator's `driverLimit`; 0 disables the driver path entirely —
+    * including the zero-quotient-edge case the class probe below guards.
     */
-  /** var, not val: the spec hook for forcing the distributed path
-    * (production code never writes it). 0 disables the driver path
-    * entirely — including the zero-quotient-edge case the class probe
-    * below guards. */
-  private[graft] var QuotientDriverLimit = 1000000L
+  val QuotientDriverLimit = 1000000L
 
   /** Collected quotient state: class sizes and the undirected class
     * adjacency, or None when EITHER frame exceeds the limit. Gating on
@@ -394,12 +392,12 @@ object Triangles {
     * class side gates via a limit+1 probe collect — no extra job: the
     * probe IS the class collect this function needs when it passes. */
   private def collectQuotient(
-      classes: DataFrame, q: DataFrame)
+      classes: DataFrame, q: DataFrame, driverLimit: Long)
       : Option[(scala.collection.mutable.LongMap[Long],
           scala.collection.mutable.LongMap[scala.collection.mutable.ArrayBuffer[Long]],
           Array[(Long, Long)])] = {
-    if (q.count() > QuotientDriverLimit) return None
-    val probe = (math.min(QuotientDriverLimit, Int.MaxValue - 1L) + 1L).toInt
+    if (q.count() > driverLimit) return None
+    val probe = (math.min(driverLimit, Int.MaxValue - 1L) + 1L).toInt
     val classRows = classes.limit(probe).collect()
     if (classRows.length >= probe) return None
     val qRows = q.collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -432,10 +430,11 @@ object Triangles {
   def vertexTriangleCountsCollapsed(
       edges: DataFrame, aCol: String, bCol: String,
       vclsOpt: Option[DataFrame] = None,
-      qOpt: Option[DataFrame] = None): DataFrame = {
+      qOpt: Option[DataFrame] = None,
+      driverLimit: Long = QuotientDriverLimit): DataFrame = {
     if (vclsOpt.isDefined && qOpt.isDefined) {
       val vcls = vclsOpt.get
-      collectQuotient(vcls.select("cls", "s").distinct(), qOpt.get).foreach {
+      collectQuotient(vcls.select("cls", "s").distinct(), qOpt.get, driverLimit).foreach {
         case (sizes, adj, _) =>
           val perClass = sizes.iterator.map { case (c, s) =>
             val nbrs = adj.getOrElse(c, scala.collection.mutable.ArrayBuffer.empty)
@@ -675,12 +674,13 @@ object Triangles {
     */
   def twinQuotientStats(edges: DataFrame, aCol: String, bCol: String,
       vclsOpt: Option[DataFrame] = None,
-      qOpt: Option[DataFrame] = None): DataFrame = {
+      qOpt: Option[DataFrame] = None,
+      driverLimit: Long = QuotientDriverLimit): DataFrame = {
     if (vclsOpt.isDefined && qOpt.isDefined) {
       val vcls = vclsOpt.get
       // Entirely quotient-level output — compute it locally when the
       // phase frames are broadcast-scale (see QuotientDriverLimit).
-      collectQuotient(vcls.select("cls", "s").distinct(), qOpt.get).foreach {
+      collectQuotient(vcls.select("cls", "s").distinct(), qOpt.get, driverLimit).foreach {
         case (sizes, adj, _) =>
           val out = sizes.iterator.map { case (c, s) =>
             (c, s, adj.get(c).map(_.length.toLong).getOrElse(0L))
@@ -718,7 +718,8 @@ object Triangles {
   def trussCanonicalsCollapsed(
       edges: DataFrame, aCol: String, bCol: String, minSupport: Long,
       vclsOpt: Option[DataFrame] = None,
-      qOpt: Option[DataFrame] = None): DataFrame = {
+      qOpt: Option[DataFrame] = None,
+      driverLimit: Long = QuotientDriverLimit): DataFrame = {
     // minSupport = 0 would admit zero-support edges here (the >= cuts
     // below become vacuous) while the expanded path — components over
     // [[trussEdges]], whose inner join against edgeSupport drops
@@ -731,7 +732,7 @@ object Triangles {
       // components are all class arithmetic — run them locally when the
       // phase frames are broadcast-scale (see QuotientDriverLimit);
       // only the member expansion join stays distributed.
-      collectQuotient(vcls.select("cls", "s").distinct(), qOpt.get).foreach {
+      collectQuotient(vcls.select("cls", "s").distinct(), qOpt.get, driverLimit).foreach {
         case (sizes, adj, qRows) =>
           def sAdjOf(c: Long): Long =
             adj.get(c).map(_.iterator.map(sizes).sum).getOrElse(0L)

@@ -1178,20 +1178,18 @@ object ModelQueries {
 object BpeEncPhases {
   import org.apache.spark.sql.{DataFrame, SparkSession}
 
-  private val built = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   def encTable(dir: String): String = s"graft_bpeenc_${Q.scratchTag(dir)}"
 
+  /** Writes the encode, then frees its checkpointed leaf. */
   def buildStored(spark: SparkSession, dir: String): Unit = {
-    graft.operators.Bucketing.dropWithLocation(spark, encTable(dir))
-    graft.operators.BpeTrainer
+    val enc = graft.operators.BpeTrainer
       .encode(Tables.documents(spark, dir), "text", "doc_id")
-      .write.format("parquet").saveAsTable(encTable(dir))
-    built.add(encTable(dir))
+    try Products.store(enc, encTable(dir))
+    finally graft.operators.Checkpoints.release(enc)
   }
 
   def ensureStored(spark: SparkSession, dir: String): Unit =
-    if (!built.contains(encTable(dir))) buildStored(spark, dir)
+    Products.ensure(spark, encTable(dir))(buildStored(spark, dir))
 
   /** The stored encode, building it on first touch in this session. */
   def encoded(spark: SparkSession, dir: String): DataFrame = {
@@ -1210,22 +1208,20 @@ object BpeEncPhases {
 object SemKeptPhases {
   import org.apache.spark.sql.{DataFrame, SparkSession}
 
-  private val built = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   def keptTable(dir: String): String = s"graft_semkept_${Q.scratchTag(dir)}"
 
+  /** Writes the kept ids, then frees the screen's checkpointed leaf. */
   def buildStored(spark: SparkSession, dir: String): Unit = {
-    graft.operators.Bucketing.dropWithLocation(spark, keptTable(dir))
-    graft.operators.SemDedup
+    val kept = graft.operators.SemDedup
       .screen(Tables.embeddings(spark, dir), "vec_id", "embedding")
       .filter(col("kept"))
       .select(col("vec_id").as("doc_id"))
-      .write.format("parquet").saveAsTable(keptTable(dir))
-    built.add(keptTable(dir))
+    try Products.store(kept, keptTable(dir))
+    finally graft.operators.Checkpoints.release(kept)
   }
 
   def ensureStored(spark: SparkSession, dir: String): Unit =
-    if (!built.contains(keptTable(dir))) buildStored(spark, dir)
+    Products.ensure(spark, keptTable(dir))(buildStored(spark, dir))
 
   /** The stored kept ids, building on first touch in this session. */
   def kept(spark: SparkSession, dir: String): DataFrame = {

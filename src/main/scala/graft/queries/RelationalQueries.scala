@@ -3354,8 +3354,6 @@ object RelationalQueries {
 object StatsPhases {
   import org.apache.spark.sql.SparkSession
 
-  private val built = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   def statsTable(dir: String): String = s"graft_statcat_${Q.scratchTag(dir)}"
 
   /** Keys q241's join-order costing needs beyond the q231 joins, plus
@@ -3429,13 +3427,11 @@ object StatsPhases {
             parts.tail.toSeq.map(col): _*).as("ndv"))
         .select(lit(t).as("tbl"), lit(k).as("key"), col("n"), col("ndv"))
     } :+ weekEntry).reduce(_ unionByName _)
-    graft.operators.Bucketing.dropWithLocation(spark, statsTable(dir))
-    cat.write.format("parquet").saveAsTable(statsTable(dir))
-    built.add(statsTable(dir))
+    Products.store(cat, statsTable(dir))
   }
 
   def ensureStored(spark: SparkSession, dir: String): Unit = synchronized {
-    if (!built.contains(statsTable(dir))) buildStored(spark, dir)
+    Products.ensure(spark, statsTable(dir))(buildStored(spark, dir))
   }
 
   /** The catalog COLLECTED for a planner rule (q244/q245): one driver
@@ -3511,7 +3507,8 @@ object StatsPhases {
   * user x week tuples — only event_id is shifted per copy), so the
   * serving artifacts stay cell-sized while the avoided scan grows 16x
   * — exactly the append-heavy 100 TB shape, scaled to fit the bench
-  * budget. Built once per input dir per JVM under `target/`, with `ts`
+  * budget. Built once per input dir per session catalog under `target/`
+  * (registered there as an external table over the dir), with `ts`
   * stored DIRECTLY in the contract int64-ns form (Tables.eventsTsNs
   * passes it through); correctness of the queries measured over it is
   * carried by the same-text sf0.01 oracle lines, the rule specs, and
@@ -3522,7 +3519,6 @@ object WidePhases {
 
   val Factor = 16
 
-  private val built = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private val statsCache = new java.util.concurrent.ConcurrentHashMap[
     String, graft.plans.CatalogRules.CatalogStats]()
 
@@ -3534,11 +3530,16 @@ object WidePhases {
     java.nio.file.Paths.get(s"target/graft_wide_${Q.scratchTag(dir)}")
       .toAbsolutePath.toString
 
-  /** Build (idempotently, once per JVM) and return the wide dir — laid
-    * out like a testdata dir (`<wd>/events.parquet`) so every loader
-    * and rule identifies the table exactly as it would the original. */
+  /** Catalog entry over the wide events dir; loaders read the dir. */
+  private[graft] def wideTable(dir: String): String =
+    s"graft_wide_${Q.scratchTag(dir)}"
+
+  /** Build (idempotently, once per session catalog) and return the wide
+    * dir — laid out like a testdata dir (`<wd>/events.parquet`) so every
+    * loader and rule identifies the table exactly as it would the
+    * original. */
   def ensureBuilt(spark: SparkSession, dir: String): String = synchronized {
-    if (!built.contains(wideDir(dir))) build(spark, dir)
+    Products.ensure(spark, wideTable(dir))(build(spark, dir))
     wideDir(dir)
   }
 
@@ -3551,7 +3552,7 @@ object WidePhases {
           col("event_id") + lit(i.toLong * 1000000000L)))
       .reduce(_ unionByName _)
     wide.write.mode("overwrite").parquet(s"$wd/events.parquet")
-    built.add(wd)
+    Products.register(spark, wideTable(dir), s"$wd/events.parquet")
   }
 
   /** [[stats]], recomputed rather than served from the cache. */
@@ -3600,8 +3601,6 @@ object WidePhases {
 object HistPhases {
   import org.apache.spark.sql.SparkSession
 
-  private val built = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** Columns the conjunct-reorder rule can cost (q246's predicates). */
   private val HistColumns = Seq("l_quantity", "l_extendedprice")
 
@@ -3645,14 +3644,12 @@ object HistPhases {
           (mn + col("bucket") * (mx - mn) / buckets).as("lo"),
           (mn + (col("bucket") + 1) * (mx - mn) / buckets).as("hi"),
           col("n_rows"), mn.as("mn"), mx.as("mx"))
-      graft.operators.Bucketing.dropWithLocation(spark, histTable(dir))
-      cat.write.format("parquet").saveAsTable(histTable(dir))
+      Products.store(cat, histTable(dir))
     } finally Checkpoints.release(bounds)
-    built.add(histTable(dir))
   }
 
   def ensureStored(spark: SparkSession, dir: String): Unit = synchronized {
-    if (!built.contains(histTable(dir))) buildStored(spark, dir)
+    Products.ensure(spark, histTable(dir))(buildStored(spark, dir))
   }
 
   /** The stored histograms collected into the rule's estimator form:
@@ -3691,8 +3688,6 @@ object HistPhases {
   */
 object McvPhases {
   import org.apache.spark.sql.SparkSession
-
-  private val built = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** Columns the conjunct-reorder rule can cost equality predicates
     * on (q254's numeric key, q260's string flag), with their MCV list
@@ -3733,14 +3728,12 @@ object McvPhases {
           .select(lit(c).as("colname"), vCanon.as("v"),
             col("cnt"), col("n"), col("ndv"))
       }.reduce(_ unionByName _)
-      graft.operators.Bucketing.dropWithLocation(spark, mcvTable(dir))
-      cat.write.format("parquet").saveAsTable(mcvTable(dir))
+      Products.store(cat, mcvTable(dir))
     } finally Checkpoints.release(scalars)
-    built.add(mcvTable(dir))
   }
 
   def ensureStored(spark: SparkSession, dir: String): Unit = synchronized {
-    if (!built.contains(mcvTable(dir))) buildStored(spark, dir)
+    Products.ensure(spark, mcvTable(dir))(buildStored(spark, dir))
   }
 
   /** The stored MCV lists collected into the estimator's serving form. */
@@ -3779,19 +3772,13 @@ object McvPhases {
 object MvPhases {
   import org.apache.spark.sql.SparkSession
 
-  private val built = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   def mvTable(dir: String): String = s"graft_mv_li_${Q.scratchTag(dir)}"
 
-  def buildStored(spark: SparkSession, dir: String): Unit = {
-    val mv = partials(Tables.lineitem(spark, dir))
-    graft.operators.Bucketing.dropWithLocation(spark, mvTable(dir))
-    mv.write.format("parquet").saveAsTable(mvTable(dir))
-    built.add(mvTable(dir))
-  }
+  def buildStored(spark: SparkSession, dir: String): Unit =
+    Products.store(partials(Tables.lineitem(spark, dir)), mvTable(dir))
 
   def ensureStored(spark: SparkSession, dir: String): Unit = synchronized {
-    if (!built.contains(mvTable(dir))) buildStored(spark, dir)
+    Products.ensure(spark, mvTable(dir))(buildStored(spark, dir))
   }
 
   /** SUM `in` per group and narrow the exact DECIMAL total back to the
@@ -4028,15 +4015,11 @@ object MvPhases {
     finally pinned.unpersist()
   }
 
-  def buildStoredSk(spark: SparkSession, dir: String): Unit = {
-    val mv = partialsSk(Tables.lineitem(spark, dir))
-    graft.operators.Bucketing.dropWithLocation(spark, skTable(dir))
-    mv.write.format("parquet").saveAsTable(skTable(dir))
-    built.add(skTable(dir))
-  }
+  def buildStoredSk(spark: SparkSession, dir: String): Unit =
+    Products.store(partialsSk(Tables.lineitem(spark, dir)), skTable(dir))
 
   def ensureStoredSk(spark: SparkSession, dir: String): Unit = synchronized {
-    if (!built.contains(skTable(dir))) buildStoredSk(spark, dir)
+    Products.ensure(spark, skTable(dir))(buildStoredSk(spark, dir))
   }
 
   /** The TIME-BUCKETED rollup behind q266 — expression dimensions: the
@@ -4065,15 +4048,11 @@ object MvPhases {
         count(lit(1)).as("cnt"),
         narrowExact(col("value").cast("decimal(18,4)"), "sum_value"))
 
-  def buildStoredTs(spark: SparkSession, dir: String): Unit = {
-    val mv = partialsTs(Tables.eventsTsNs(spark, dir))
-    graft.operators.Bucketing.dropWithLocation(spark, tsTable(dir))
-    mv.write.format("parquet").saveAsTable(tsTable(dir))
-    built.add(tsTable(dir))
-  }
+  def buildStoredTs(spark: SparkSession, dir: String): Unit =
+    Products.store(partialsTs(Tables.eventsTsNs(spark, dir)), tsTable(dir))
 
   def ensureStoredTs(spark: SparkSession, dir: String): Unit = synchronized {
-    if (!built.contains(tsTable(dir))) buildStoredTs(spark, dir)
+    Products.ensure(spark, tsTable(dir))(buildStoredTs(spark, dir))
   }
 
   /** The WIDE fixture's hour rollup ([[WidePhases]] — the q269w bench
@@ -4085,16 +4064,13 @@ object MvPhases {
 
   def ensureStoredTsWide(spark: SparkSession, dir: String): Unit =
     synchronized {
-      if (!built.contains(tsTableWide(dir))) buildStoredTsWide(spark, dir)
+      Products.ensure(spark, tsTableWide(dir))(buildStoredTsWide(spark, dir))
     }
 
   /** Force (re)build of the wide time rollup. */
   def buildStoredTsWide(spark: SparkSession, dir: String): Unit = synchronized {
     val wd = WidePhases.ensureBuilt(spark, dir)
-    val mv = partialsTs(Tables.eventsTsNs(spark, wd))
-    graft.operators.Bucketing.dropWithLocation(spark, tsTableWide(dir))
-    mv.write.format("parquet").saveAsTable(tsTableWide(dir))
-    built.add(tsTableWide(dir))
+    Products.store(partialsTs(Tables.eventsTsNs(spark, wd)), tsTableWide(dir))
   }
 
   /** [[mvDefTs]] pointed at the wide fixture: base path pins the WIDE
@@ -4343,12 +4319,8 @@ object MvPhases {
         narrowExact(col("value").cast("decimal(18,4)"), "sum_value"))
 
   def ensureStoredTsU(spark: SparkSession, dir: String): Unit = synchronized {
-    if (!built.contains(tsuTable(dir))) {
-      val mv = partialsTsU(Tables.eventsTsNs(spark, dir))
-      graft.operators.Bucketing.dropWithLocation(spark, tsuTable(dir))
-      mv.write.format("parquet").saveAsTable(tsuTable(dir))
-      built.add(tsuTable(dir))
-    }
+    Products.ensure(spark, tsuTable(dir))(
+      Products.store(partialsTsU(Tables.eventsTsNs(spark, dir)), tsuTable(dir)))
   }
 
   /** Fold an arrival batch into the (hour x user) rollup — q275's

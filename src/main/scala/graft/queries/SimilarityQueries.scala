@@ -1379,9 +1379,9 @@ object IvfPhases {
   }
 
   // Trained centroids per input dir: k-means .fit() is eager, so the
-  // train phase really pays the training cost; the probe phase reuses
-  // the tiny centroid table exactly as a serving system would.
-  private val cents = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  // train phase really pays the training cost; the probe phase reads the
+  // stored 8-row centroid table exactly as a serving system would.
+  private[graft] def centsTable(dir: String) = s"graft_ivfkm_${Q.scratchTag(dir)}"
 
   /** One-shot: seeded k-means. maxIter 10: at the oracle's corpus size
     * k-means cost is pure per-iteration scheduling overhead, and the
@@ -1390,26 +1390,32 @@ object IvfPhases {
     * nothing.
     */
   def train(spark: SparkSession, dir: String): Unit =
-    cents.put(dir, graft.operators.Similarity.trainedCentroids(
+    Products.store(graft.operators.Similarity.trainedCentroids(
       Tables.embeddings(spark, dir), "vec_id", "embedding",
-      nlist = 8, seed = 42L, maxIter = 10))
+      nlist = 8, seed = 42L, maxIter = 10), centsTable(dir))
 
   /** Exhaustive probe (nprobe = nlist) with the trained quantizer;
     * trains on demand if [[train]] has not run for this dir.
     */
   def trainedProbe(spark: SparkSession, dir: String): DataFrame = {
-    if (!cents.containsKey(dir)) train(spark, dir)
+    Products.ensure(spark, centsTable(dir))(train(spark, dir))
     val e = Tables.embeddings(spark, dir)
     graft.operators.Similarity.cosineTopKIvf(
       e, e.filter(col("vec_id") < 8), "vec_id", "embedding",
-      k = 5, nlist = 8, nprobe = 8, centroidsOpt = Some(cents.get(dir)))
+      k = 5, nlist = 8, nprobe = 8,
+      centroidsOpt = Some(spark.table(centsTable(dir))))
   }
 
   // ---- q156 delta-segment family (own prefix: the base segment is the
   // vec_id % 5 != 4 slice, NOT q79's full-corpus index) ----
 
-  private def segPrefix(dir: String) = s"graft_ivfseg_${Q.scratchTag(dir)}"
-  private val segBuilt = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private[graft] def segPrefix(dir: String) = s"graft_ivfseg_${Q.scratchTag(dir)}"
+
+  /** The tables of one index prefix: centroids, cells and delta segment. */
+  private def indexTables(prefix: String): Seq[String] = {
+    import graft.operators.IvfIndex._
+    Seq(centroidTable(prefix), corpusTable(prefix), deltaTable(prefix))
+  }
 
   /** Arrival batch for the delta segment: vec_id ≡ 4 (mod 5) — 20 % of
     * the corpus at every sf; base = the other 80 %.
@@ -1418,27 +1424,26 @@ object IvfPhases {
     Tables.embeddings(spark, dir).filter(col("vec_id") % 5 === 4)
 
   /** One-shot: base IVF index over the existing (non-arrival) slice. */
-  def segBaseBuild(spark: SparkSession, dir: String): Unit = {
+  def segBaseBuild(spark: SparkSession, dir: String): Unit =
     graft.operators.IvfIndex.build(
       Tables.embeddings(spark, dir).filter(col("vec_id") % 5 =!= 4),
       "vec_id", "embedding", nlist = 16, prefix = segPrefix(dir))
-    segBuilt.add(segPrefix(dir))
-  }
 
   /** Per-ingest-batch: fold the arrivals into a delta segment against the
     * FROZEN base centroids (the cost a vector store pays per batch — one
     * broadcast-quantizer pass over the batch, base postings untouched).
     */
   def segDeltaAppend(spark: SparkSession, dir: String): Unit = {
-    if (!segBuilt.contains(segPrefix(dir))) segBaseBuild(spark, dir)
+    import graft.operators.IvfIndex.{centroidTable, corpusTable}
+    Products.ensure(spark, centroidTable(segPrefix(dir)), corpusTable(segPrefix(dir)))(
+      segBaseBuild(spark, dir))
     graft.operators.IvfIndex.appendDelta(
       segArrivals(spark, dir), "vec_id", "embedding", prefix = segPrefix(dir))
-    segBuilt.add(graft.operators.IvfIndex.deltaTable(segPrefix(dir)))
   }
 
   def ensureSegments(spark: SparkSession, dir: String): Unit =
-    if (!segBuilt.contains(graft.operators.IvfIndex.deltaTable(segPrefix(dir))))
-      segDeltaAppend(spark, dir)
+    Products.ensure(spark, indexTables(segPrefix(dir)): _*)(
+      segDeltaAppend(spark, dir))
 
   /** Probe base ∪ delta — identical semantics to a merged-corpus rebuild
     * with the same centroids (q156's oracle floods exactly that).
@@ -1454,8 +1459,7 @@ object IvfPhases {
   // delta, so it cannot share q156's live base ∪ delta segments — q156
   // measures the probe WITH a delta, q228 the probe after the merge) ----
 
-  private def cmpPrefix(dir: String) = s"graft_ivfcmp_${Q.scratchTag(dir)}"
-  private val cmpDone = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private[graft] def cmpPrefix(dir: String) = s"graft_ivfcmp_${Q.scratchTag(dir)}"
 
   /** One-shot: the q156 segment lifecycle carried to its closing step —
     * base build over the non-arrival slice, delta fold of the arrivals,
@@ -1464,7 +1468,8 @@ object IvfPhases {
     * the frozen base centroids.
     */
   def ensureCompacted(spark: SparkSession, dir: String): Unit =
-    if (!cmpDone.contains(cmpPrefix(dir))) buildCompacted(spark, dir)
+    Products.ensure(spark, indexTables(cmpPrefix(dir)): _*)(
+      buildCompacted(spark, dir))
 
   /** Force (re)run of the whole lifecycle; each step overwrites. */
   def buildCompacted(spark: SparkSession, dir: String): Unit = {
@@ -1474,7 +1479,6 @@ object IvfPhases {
     graft.operators.IvfIndex.appendDelta(
       segArrivals(spark, dir), "vec_id", "embedding", prefix = cmpPrefix(dir))
     graft.operators.IvfIndex.compact(spark, prefix = cmpPrefix(dir))
-    cmpDone.add(cmpPrefix(dir))
   }
 
   /** Probe the COMPACTED base — a plain single-segment [[probe]], no

@@ -2048,22 +2048,18 @@ object HdrPhases {
   import org.apache.spark.sql.SparkSession
   import graft.operators.{HdrSketch, TextAnalysis}
 
-  private val built = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   def hdrTable(dir: String): String = s"graft_hdrsk_${Q.scratchTag(dir)}"
 
   def buildStored(spark: SparkSession, dir: String): Unit = {
     val existing = Tables.documents(spark, dir)
       .filter(col("doc_id") % 2 === 0)
       .select(col("source"), TextAnalysis.tokenCount(col("text")).as("toks"))
-    graft.operators.Bucketing.dropWithLocation(spark, hdrTable(dir))
-    HdrSketch.sketch(existing, "toks", Seq("source"), subBits = 4)
-      .write.format("parquet").saveAsTable(hdrTable(dir))
-    built.add(hdrTable(dir))
+    Products.store(
+      HdrSketch.sketch(existing, "toks", Seq("source"), subBits = 4), hdrTable(dir))
   }
 
   def ensureStored(spark: SparkSession, dir: String): Unit =
-    if (!built.contains(hdrTable(dir))) buildStored(spark, dir)
+    Products.ensure(spark, hdrTable(dir))(buildStored(spark, dir))
 }
 
 /** The stored "yesterday" KMV registers behind q164: per-source
@@ -2075,8 +2071,6 @@ object KmvPhases {
   import org.apache.spark.sql.SparkSession
   import graft.functions.KMinSketch
 
-  private val built = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   def kmvTable(dir: String): String = s"graft_kmvreg_${Q.scratchTag(dir)}"
 
   def buildStored(spark: SparkSession, dir: String): Unit = {
@@ -2087,21 +2081,13 @@ object KmvPhases {
       .groupBy("source")
       .agg(KMinSketch.kmin(col("h"), 8).as("kmin"),
         count(lit(1)).as("n_docs"))
-    graft.operators.Bucketing.dropWithLocation(spark, kmvTable(dir))
-    existing.write.format("parquet").saveAsTable(kmvTable(dir))
-    built.add(kmvTable(dir))
+    Products.store(existing, kmvTable(dir))
   }
 
   def ensureStored(spark: SparkSession, dir: String): Unit =
-    if (!built.contains(kmvTable(dir))) buildStored(spark, dir)
+    Products.ensure(spark, kmvTable(dir))(buildStored(spark, dir))
 }
 
-/** The stored v1 decontamination product behind q157: the per-doc report
-  * and the benchmark gram set (= the screen), materialized once per
-  * input dir — what a serving pipeline holds between benchmark releases.
-  * The bench times the v1 build as its own line so the FOLD's number is
-  * the per-release cost, not build+fold.
-  */
 /** The stored "yesterday" HLL register table behind q160: per-source
   * registers over the even half of the corpus, persisted once per input
   * dir — the constant-size statistics state a serving pipeline folds
@@ -2111,22 +2097,18 @@ object HllPhases {
   import org.apache.spark.sql.SparkSession
   import graft.operators.{HyperLogLog, TextAnalysis}
 
-  private val built = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   def registerTable(dir: String): String = s"graft_hllreg_${Q.scratchTag(dir)}"
 
   def buildStored(spark: SparkSession, dir: String): Unit = {
     val existing = Tables.documents(spark, dir)
       .filter(col("doc_id") % 2 === 0)
       .select(col("source"), explode(TextAnalysis.wsTokens(col("text"))).as("tok"))
-    graft.operators.Bucketing.dropWithLocation(spark, registerTable(dir))
-    HyperLogLog.registers(existing, "tok", Seq("source"), p = 6)
-      .write.format("parquet").saveAsTable(registerTable(dir))
-    built.add(registerTable(dir))
+    Products.store(
+      HyperLogLog.registers(existing, "tok", Seq("source"), p = 6), registerTable(dir))
   }
 
   def ensureStored(spark: SparkSession, dir: String): Unit =
-    if (!built.contains(registerTable(dir))) buildStored(spark, dir)
+    Products.ensure(spark, registerTable(dir))(buildStored(spark, dir))
 }
 
 /** The stored "yesterday" count-min matrix behind q162: the 4x64 count
@@ -2137,28 +2119,28 @@ object CmPhases {
   import org.apache.spark.sql.SparkSession
   import graft.operators.{CountMin, TextAnalysis}
 
-  private val built = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   def cmTable(dir: String): String = s"graft_cmsk_${Q.scratchTag(dir)}"
 
   def buildStored(spark: SparkSession, dir: String): Unit = {
     val existing = Tables.documents(spark, dir)
       .filter(col("doc_id") % 2 === 0)
       .select(explode(TextAnalysis.wsTokens(col("text"))).as("tok"))
-    graft.operators.Bucketing.dropWithLocation(spark, cmTable(dir))
-    CountMin.sketch(existing, "tok", depth = 4, width = 64)
-      .write.format("parquet").saveAsTable(cmTable(dir))
-    built.add(cmTable(dir))
+    Products.store(
+      CountMin.sketch(existing, "tok", depth = 4, width = 64), cmTable(dir))
   }
 
   def ensureStored(spark: SparkSession, dir: String): Unit =
-    if (!built.contains(cmTable(dir))) buildStored(spark, dir)
+    Products.ensure(spark, cmTable(dir))(buildStored(spark, dir))
 }
 
+/** The stored v1 decontamination product behind q157: the per-doc report
+  * and the benchmark gram set (= the screen), materialized once per
+  * input dir — what a serving pipeline holds between benchmark releases.
+  * The bench times the v1 build as its own line so the FOLD's number is
+  * the per-release cost, not build+fold.
+  */
 object DecontamPhases {
   import org.apache.spark.sql.SparkSession
-
-  private val built = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   def reportTable(dir: String): String = s"graft_dcta_rep_${Q.scratchTag(dir)}"
   def gramTable(dir: String): String = s"graft_dcta_grams_${Q.scratchTag(dir)}"
@@ -2173,12 +2155,9 @@ object DecontamPhases {
     val v1 = docs.filter(col("doc_id") % 10 === 0)
     val rep = Decontaminate.report(corpus, v1, "text", "doc_id")
     graft.operators.Bucketing.writeBucketed(rep, reportTable(dir), "doc_id", 4)
-    val grams = Decontaminate.benchGramSet(v1, "text")
-    graft.operators.Bucketing.dropWithLocation(spark, gramTable(dir))
-    grams.write.format("parquet").saveAsTable(gramTable(dir))
-    built.add(reportTable(dir))
+    Products.store(Decontaminate.benchGramSet(v1, "text"), gramTable(dir))
   }
 
   def ensureStored(spark: SparkSession, dir: String): Unit =
-    if (!built.contains(reportTable(dir))) buildStored(spark, dir)
+    Products.ensure(spark, reportTable(dir), gramTable(dir))(buildStored(spark, dir))
 }

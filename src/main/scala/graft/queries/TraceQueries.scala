@@ -717,18 +717,21 @@ object TraceQueries {
   * one odd-id arrival append, one touched-bucket compaction — the
   * OPTIMIZE-ZORDER lifecycle exercised once per input dir. The layout
   * lives under java.io.tmpdir keyed by the dir tag (a filesystem
-  * artifact, not a catalog table — it IS the file layout under audit).
+  * artifact — it IS the file layout under audit, read by path); the
+  * finished lifecycle registers an external catalog table over it.
   */
 object ZCompactPhases {
   import org.apache.spark.sql.SparkSession
   import graft.operators.Layout
 
-  private val built = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   val shiftBits = 26
 
   def layoutDir(dir: String): String =
     s"${sys.props("java.io.tmpdir")}/graft_zinc_${Q.scratchTag(dir)}"
+
+  /** Catalog entry over [[layoutDir]], registered once ingest finishes. */
+  private[graft] def layoutTable(dir: String): String =
+    s"graft_zinc_${Q.scratchTag(dir)}"
 
   private def events(spark: SparkSession, dir: String) =
     Tables.eventsTsNs(spark, dir).select("user_id", "event_id")
@@ -754,7 +757,7 @@ object ZCompactPhases {
       events(spark, dir).filter(col("event_id") % 50 === 1),
       col("user_id"), col("event_id"), out, shiftBits)
     Layout.compactTouched(spark, out, touched)
-    built.add(out)
+    Products.register(spark, layoutTable(dir), out)
   }
 
   def build(spark: SparkSession, dir: String): Unit = {
@@ -763,5 +766,5 @@ object ZCompactPhases {
   }
 
   def ensure(spark: SparkSession, dir: String): Unit =
-    if (!built.contains(layoutDir(dir))) build(spark, dir)
+    Products.ensure(spark, layoutTable(dir))(build(spark, dir))
 }

@@ -226,29 +226,25 @@ class TrianglesSpec extends AnyFunSuite {
       df.select(col("doc_a").as("u"), col("doc_b").as("v")), vcls)
       .localCheckpoint()
     assert(q.count() == 0L, "fixture must have zero quotient edges")
-    val saved = Triangles.QuotientDriverLimit
-    try {
-      Triangles.QuotientDriverLimit = 4L // < 8 classes; >= 0 quotient edges
-      def rows(f: org.apache.spark.sql.DataFrame) =
-        f.collect().map(_.toSeq.mkString("|")).sorted.toSeq
-      val gatedCounts = rows(Triangles.vertexTriangleCountsCollapsed(
-        df, "doc_a", "doc_b", Some(vcls), Some(q)))
-      val gatedTruss = rows(Triangles.trussCanonicalsCollapsed(
-        df, "doc_a", "doc_b", minSupport = 1L, Some(vcls), Some(q)))
-      val gatedStats = rows(Triangles.twinQuotientStats(
-        df, "doc_a", "doc_b", Some(vcls), Some(q)))
-      Triangles.QuotientDriverLimit = saved
-      assert(gatedCounts == rows(
-        Triangles.vertexTriangleCountsCollapsed(df, "doc_a", "doc_b")))
-      assert(gatedTruss == rows(
-        Triangles.trussCanonicalsCollapsed(df, "doc_a", "doc_b", minSupport = 1L)))
-      assert(gatedStats == rows(
-        Triangles.twinQuotientStats(df, "doc_a", "doc_b")))
-      // and 0 disables the driver path even at zero quotient edges
-      Triangles.QuotientDriverLimit = 0L
-      assert(rows(Triangles.twinQuotientStats(
-        df, "doc_a", "doc_b", Some(vcls), Some(q))) == gatedStats)
-    } finally Triangles.QuotientDriverLimit = saved
+    def rows(f: org.apache.spark.sql.DataFrame) =
+      f.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    val limit = 4L // < 8 classes; >= 0 quotient edges
+    val gatedCounts = rows(Triangles.vertexTriangleCountsCollapsed(
+      df, "doc_a", "doc_b", Some(vcls), Some(q), driverLimit = limit))
+    val gatedTruss = rows(Triangles.trussCanonicalsCollapsed(
+      df, "doc_a", "doc_b", minSupport = 1L, Some(vcls), Some(q),
+      driverLimit = limit))
+    val gatedStats = rows(Triangles.twinQuotientStats(
+      df, "doc_a", "doc_b", Some(vcls), Some(q), driverLimit = limit))
+    assert(gatedCounts == rows(
+      Triangles.vertexTriangleCountsCollapsed(df, "doc_a", "doc_b")))
+    assert(gatedTruss == rows(
+      Triangles.trussCanonicalsCollapsed(df, "doc_a", "doc_b", minSupport = 1L)))
+    assert(gatedStats == rows(
+      Triangles.twinQuotientStats(df, "doc_a", "doc_b")))
+    // and 0 disables the driver path even at zero quotient edges
+    assert(rows(Triangles.twinQuotientStats(
+      df, "doc_a", "doc_b", Some(vcls), Some(q), driverLimit = 0L)) == gatedStats)
     graft.operators.Checkpoints.release(q)
     graft.operators.Checkpoints.release(vcls)
   }
